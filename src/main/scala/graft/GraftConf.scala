@@ -113,7 +113,7 @@ object GraftConf {
   def ivfInitMode(s: SparkSession): String =
     s.conf.get("spark.graft.ivf.initMode", "k-means||")
 
-  /** BRP-LSH bucket length (tools.LshTune r3 sweep, threshold 0.35:
+  /** BRP-LSH bucket length (round-3 sweep, BASELINE.md; threshold 0.35:
     * 0.25 matches 0.5/1.0 recall at every table count while trimming the
     * candidate set; 0.1 collapses recall to 0.81-0.93). */
   def lshBucketLength(s: SparkSession): Double =
@@ -339,7 +339,7 @@ object GraftConf {
 
   /** MinHash signature length (seeded hash functions per doc, q51/q59).
     * Longer signatures estimate Jaccard tighter but cost one md5 pass
-    * per function; bandRows must divide it. tools.SketchTune sweep on
+    * per function; bandRows must divide it. Round-5 sketch sweep on
     * the test corpus (BASELINE.md): 8 is the knee — recall 1.0 at half
     * the hashing of 16. */
   def minhashFuncs(s: SparkSession): Int =

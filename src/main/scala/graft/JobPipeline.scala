@@ -48,9 +48,10 @@ object JobPipeline {
     // Stage 2 — embed: deterministic TF-IDF pipeline, unit-normalized
     // (app/generate_embeddings.py:25-50; M1 stand-in)
     val embedded = pipe.stage("s2_embed") {
-      // the clean frame is a deterministic function of (dataset, stage 1),
-      // so the fitted model may be cached/persisted under that identity
-      operators.Embedding.embedDocs(clean, Some(s"$sfDir#s1_preprocess"))
+      // the model is fitted on stage 1's output, so it is cached and
+      // persisted under that directory: the store fingerprints its parquet
+      // files, and a corpus regenerated under the same sfDir refits
+      operators.Embedding.embedDocs(clean, Some(s"$workDir/s1_preprocess"))
     }
 
     // Stage 3 — "index add": persist the searchable vector table keyed by
@@ -77,12 +78,7 @@ object JobPipeline {
     val pairs = pipe.stage("s4_pairs") {
       if (s3Stats.rows <= GraftConf.exactPairCutoff(spark) &&
           s3Stats.bytes <= GraftConf.exactPairMaxBytes(spark)) {
-        val a = indexed.select(col("doc_id").as("id1"), col("embedding").as("v1"))
-        val b = indexed.select(col("doc_id").as("id2"), col("embedding").as("v2"))
-        a.join(b, col("id1") < col("id2"))
-          .select(col("id1"), col("id2"),
-            round(cosineFast(col("v1"), col("v2")), 4).as("sim"))
-          .filter(col("sim") >= threshold)
+        exactPairs(indexed, threshold)
       } else {
         operators.Ann.lshNearDupFrame(indexed, "doc_id", "embedding",
           threshold, GraftConf.lshBucketLength(spark), GraftConf.lshNumTables(spark))
@@ -98,6 +94,19 @@ object JobPipeline {
     ReportSink.writePairDetails(sorted, clean,
       s"$workDir/top_pair_detail.md", s"$workDir/bottom_pair_detail.md")
     sorted
+  }
+
+  /** Stage 4's exact tier over (doc_id, embedding): every pair id1 < id2
+    * whose cosine, rounded to 4 places, is at least `threshold`. The
+    * threshold sits in the join condition after the id test, so the
+    * kernel scores each unordered pair once (a filter over the join
+    * would be pushed in ahead of it); survivors rescore in the select. */
+  private[graft] def exactPairs(indexed: DataFrame, threshold: Double): DataFrame = {
+    val a = indexed.select(col("doc_id").as("id1"), col("embedding").as("v1"))
+    val b = indexed.select(col("doc_id").as("id2"), col("embedding").as("v2"))
+    val sim = round(cosineFast(col("v1"), col("v2")), 4)
+    a.join(b, col("id1") < col("id2") && sim >= threshold)
+      .select(col("id1"), col("id2"), sim.as("sim"))
   }
 
   /** CLI entry: JobPipeline <sfDir> <workDir> [threshold]. */

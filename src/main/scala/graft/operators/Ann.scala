@@ -419,7 +419,7 @@ object Ann {
     lshNearDupTuned(s, d, threshold,
       GraftConf.lshBucketLength(s), GraftConf.lshNumTables(s))
 
-  /** Explicitly-tuned variant (dev sweep: tools.LshTune — at threshold
+  /** Explicitly-tuned variant (round-3 sweep, BASELINE.md: at threshold
     * 0.35 the corpus has no true near-dups, so recall is table-count
     * bound: nt=5 -> 0.98, nt=8 -> 0.996, nt=12 -> 1.00, and bucketLength
     * only bites below ~0.25). */
@@ -976,10 +976,11 @@ object Ann {
     * vectors still halves.
     *
     * After the loop, one SERVE-QUALITY refinement pass (measured
-    * necessary by tools.ServeProbe: without it, post-repair search
-    * recall drops 0.93→0.85): a drift-dominated cell's median split
-    * leaves the cell's few ORIGINAL members in cells whose member-mean
-    * centroids sit inside the drift cluster, so the probe join ranks
+    * necessary by the post-repair serve probe whose nprobe sweep SCALE.md
+    * records in round 12: without it, post-repair search recall drops
+    * 0.93→0.85): a drift-dominated cell's median split leaves the
+    * cell's few ORIGINAL members in cells whose member-mean centroids sit
+    * inside the drift cluster, so the probe join ranks
     * their home cells last and search loses exactly those neighbors.
     * The pass reassigns members of SPLIT cells (only — cost stays
     * bounded by the overloaded cells' members) to the nearest UNSPLIT

@@ -179,7 +179,7 @@ object Dedup {
       .orderBy(col("id1"), col("id2"))
 
   /** Banded candidate relation (id1, id2, hamming), pre-radius-filter —
-    * the quantity the bands knob tunes (and what SketchTune measures). */
+    * the quantity the bands knob tunes (BASELINE.md round-5 sketch sweep). */
   def simhashCandidates(s: SparkSession, d: String): DataFrame = {
     val nb = GraftConf.simhashBands(s)
     require(nb >= 2 && nb % 2 == 0 && 32 % (nb / 2) == 0,

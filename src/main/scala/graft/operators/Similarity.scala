@@ -66,10 +66,11 @@ object Similarity {
     val joinCond =
       if (prefilterLabel) col("id1") < col("id2") && col("lab1") === col("lab2")
       else col("id1") < col("id2")
-    a.join(b, joinCond)
-      .select(col("id1"), col("id2"), cosineFast(col("v1"), col("v2")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .select(col("id1"), col("id2"), round(col("sim"), 4).as("sim"))
+    // the kernel test goes last in the join condition, so it scores only
+    // id-ordered (same-label) pairs; survivors rescore in the select
+    val sim = cosineFast(col("v1"), col("v2"))
+    a.join(b, joinCond && sim >= threshold)
+      .select(col("id1"), col("id2"), round(sim, 4).as("sim"))
       .orderBy(col("sim").desc, col("id1"), col("id2"))
   }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -63,33 +62,11 @@ object AnnScaleRehearsal {
     // run >> cpu ⇒ I/O or page-cache misses (the cold-file-cache
     // signature); gc large ⇒ memory pressure; cpu itself moving on an
     // identical plan ⇒ frequency scaling / contention.
-    object m extends SparkListener {
-      val sw = new java.util.concurrent.atomic.AtomicLong
-      val sr = new java.util.concurrent.atomic.AtomicLong
-      val spill = new java.util.concurrent.atomic.AtomicLong
-      val run = new java.util.concurrent.atomic.AtomicLong // ms
-      val cpu = new java.util.concurrent.atomic.AtomicLong // ns
-      val gc = new java.util.concurrent.atomic.AtomicLong // ms
-      def reset(): Unit = {
-        sw.set(0); sr.set(0); spill.set(0); run.set(0); cpu.set(0); gc.set(0)
-      }
-      def metricsJson: String =
-        f""""shuffle_read_mb":${sr.get / 1e6}%.1f,"spill_mb":${spill.get / 1e6}%.1f,""" +
-          f""""run_sec":${run.get / 1e3}%.1f,"cpu_sec":${cpu.get / 1e9}%.1f,""" +
-          f""""gc_sec":${gc.get / 1e3}%.1f"""
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val tm = sc.stageInfo.taskMetrics
-        if (tm != null) {
-          sw.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-          sr.addAndGet(tm.shuffleReadMetrics.totalBytesRead)
-          spill.addAndGet(tm.diskBytesSpilled)
-          run.addAndGet(tm.executorRunTime)
-          cpu.addAndGet(tm.executorCpuTime)
-          gc.addAndGet(tm.jvmGCTime)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(m)
+    val m = StageListener.attach(spark)
+    def metricsJson: String =
+      f""""shuffle_read_mb":${m.total(_.shuffleRead) / 1e6}%.1f,"spill_mb":${m.total(_.diskSpill) / 1e6}%.1f,""" +
+        f""""run_sec":${m.total(_.runMs) / 1e3}%.1f,"cpu_sec":${m.total(_.cpuNs) / 1e9}%.1f,""" +
+        f""""gc_sec":${m.total(_.gcMs) / 1e3}%.1f"""
 
     // the exact O(Q·N) baseline (and everything built on it — the
     // static-12-cells counterexample, the recall probe, the flat SQ8
@@ -213,7 +190,7 @@ object AnnScaleRehearsal {
           val rows = fn(dir).count()
           val sec = (System.nanoTime() - t0) / 1e9
           val line = f"""\"$tag/$name/$phase\":{\"sec\":$sec%.2f,\"rows\":$rows,""" +
-            m.metricsJson + "}"
+            metricsJson + "}"
           println(s"[ann-rehearsal] $line")
           out.append(line).append(",")
         }
@@ -233,7 +210,7 @@ object AnnScaleRehearsal {
           nprobe = graft.GraftConf.ivfNprobe(spark), queryMod = 10).count()
         val sec = (System.nanoTime() - t0) / 1e9
         val line = f"""\"x$factor/ivf_static_c12/$phase\":{\"sec\":$sec%.2f,\"rows\":$rows,""" +
-          m.metricsJson + "}"
+          metricsJson + "}"
         println(s"[ann-rehearsal] $line")
         out.append(line).append(",")
       }
@@ -302,7 +279,7 @@ object AnnScaleRehearsal {
         val resumeSec = (System.nanoTime() - t1) / 1e9
         val line = f""""$tag/loop_recovery":{"crash_sec":$crashSec%.2f,""" +
           f""""resume_sec":$resumeSec%.2f,"n_total":${loop.nTotal},""" +
-          m.metricsJson + "}"
+          metricsJson + "}"
         println(s"[ann-rehearsal] $line")
         out.append(line).append(",")
         loop.served.unpersist()
@@ -331,7 +308,7 @@ object AnnScaleRehearsal {
         graft.operators.Graph.annKnnEdges(spark, work, k = 5).count()
         val sec = (System.nanoTime() - t0) / 1e9
         val line = f""""sweep/r${rounds}_w$width":{"recall_1x":$recall%.4f,""" +
-          f""""sec_x$factor":$sec%.1f,"shuffle_read_mb":${m.sr.get / 1e6}%.1f}"""
+          f""""sec_x$factor":$sec%.1f,"shuffle_read_mb":${m.total(_.shuffleRead) / 1e6}%.1f}"""
         println(s"[ann-rehearsal] $line")
         out.append(line).append(",")
       }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -75,22 +74,8 @@ object ScaleRehearsal {
       println(f"[rehearsal] upsample x$factor ($mode) written in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
 
-    // --- metrics listener: shuffle + spill totals between resets ------
-    object m extends SparkListener {
-      val sw = new java.util.concurrent.atomic.AtomicLong
-      val sr = new java.util.concurrent.atomic.AtomicLong
-      val spill = new java.util.concurrent.atomic.AtomicLong
-      def reset(): Unit = { sw.set(0); sr.set(0); spill.set(0) }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val tm = sc.stageInfo.taskMetrics
-        if (tm != null) {
-          sw.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-          sr.addAndGet(tm.shuffleReadMetrics.totalBytesRead)
-          spill.addAndGet(tm.diskBytesSpilled)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(m)
+    // shuffle + spill totals between resets
+    val m = StageListener.attach(spark)
 
     // --- Zipf counterpart for q210's adversarial floor (VERDICT r9
     // item 5): the soup corpus's 31-term vocabulary at df ≈ 0.76·N is
@@ -160,7 +145,7 @@ object ScaleRehearsal {
             val agree = if (cap == 0) { uncapped = res; 1.0 }
               else res.intersect(uncapped).size.toDouble / math.max(1, uncapped.size)
             val line = f"""\"$key\":{\"sec\":$sec%.2f,\"rows\":${res.size},""" +
-              f"""\"shuffle_read_mb\":${m.sr.get / 1e6}%.1f,\"spill_mb\":${m.spill.get / 1e6}%.1f,""" +
+              f"""\"shuffle_read_mb\":${m.total(_.shuffleRead) / 1e6}%.1f,\"spill_mb\":${m.total(_.diskSpill) / 1e6}%.1f,""" +
               f"""\"cand_per_query_avg\":${cand.getDouble(0)}%.0f,\"cand_per_query_max\":${cand.getLong(1)},""" +
               f"""\"agreement_vs_uncapped\":$agree%.3f}"""
             println(s"[rehearsal] $line")
@@ -310,8 +295,8 @@ object ScaleRehearsal {
         val rows = fn(dir).count()
         val sec = (System.nanoTime() - t0) / 1e9
         val line = f"""\"$tag/$name\":{\"sec\":$sec%.2f,\"rows\":$rows,""" +
-          f"""\"shuffle_write_mb\":${m.sw.get / 1e6}%.1f,\"shuffle_read_mb\":${m.sr.get / 1e6}%.1f,""" +
-          f"""\"spill_mb\":${m.spill.get / 1e6}%.1f}"""
+          f"""\"shuffle_write_mb\":${m.total(_.shuffleWrite) / 1e6}%.1f,\"shuffle_read_mb\":${m.total(_.shuffleRead) / 1e6}%.1f,""" +
+          f"""\"spill_mb\":${m.total(_.diskSpill) / 1e6}%.1f}"""
         println(s"[rehearsal] $line")
         out.append(line).append(",")
         if (name.startsWith("q210")) {

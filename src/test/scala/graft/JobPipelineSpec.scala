@@ -95,4 +95,36 @@ class JobPipelineSpec extends SparkSpec {
     assert(recall >= 0.99, s"LSH-path pair recall $recall vs exact (${exact.size})")
     assert((lsh -- exact).isEmpty, "LSH verify stage must not invent pairs")
   }
+
+  test("a corpus regenerated under the same sfDir gets a fresh embedding model from a kept store") {
+    val root = Files.createTempDirectory("graft_jobpipe_regen").toString
+    val sfDir = s"$root/sf"
+    val ss = spark; import ss.implicits._
+    // A and B share a vocabulary but not its document frequencies, so
+    // their IDF weights, and with them the unit vectors, differ
+    def writeCorpus(word: (Int, Int) => Int): Unit =
+      (0 until 60).map { i =>
+        (i.toLong, (0 until 8).map(j => s"w${word(i, j) % 30}").mkString(" "))
+      }.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$sfDir/documents.parquet")
+    def vectors(work: String): Map[Long, Seq[Double]] =
+      spark.read.parquet(s"$work/s2_embed").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    def runWithStore(store: String, work: String): Unit = {
+      spark.conf.set("spark.graft.index.dir", s"$root/$store")
+      JobPipeline.run(spark, sfDir, s"$root/$work", threshold = 0.9)
+      operators.Embedding.clearCaches()
+    }
+    try {
+      writeCorpus((i, j) => i * 7 + j * j)
+      runWithStore("store", "work_a")
+      writeCorpus((i, j) => i * (j + 1))
+      runWithStore("store", "work_b")
+      runWithStore("fresh_store", "work_fresh")
+      val (got, want) = (vectors(s"$root/work_b"), vectors(s"$root/work_fresh"))
+      assert(got.keySet == want.keySet)
+      val stale = want.count { case (id, v) => got(id) != v }
+      assert(stale == 0, s"stale vectors out of ${want.size}: " +
+        "the kept store served the model fitted on the previous corpus")
+    } finally spark.conf.unset("spark.graft.index.dir")
+  }
 }

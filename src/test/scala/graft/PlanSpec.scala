@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 
 /** Plan-shape contracts — the scale properties COVERAGE/SCALE claim, as
   * executable assertions instead of prose: column pruning and filter
@@ -29,6 +30,24 @@ class PlanSpec extends SparkSpec {
     assert(readSchemas.nonEmpty)
     readSchemas.foreach { rs =>
       assert(!rs.contains("label"), s"label not pruned from scan: $rs")
+    }
+  }
+
+  test("exact pair tiers test the ids before the cosine kernel (q31, pipeline stage 4)") {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    def scoresKernel(e: Expression) = e.exists(_.prettyName == "graft_cosine")
+    val vectors = Tables.embeddings(spark, sfTiny)
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    Seq("q31" -> Registry.byName("q31_neardup_pairs").run(spark, sfTiny),
+        "stage 4" -> JobPipeline.exactPairs(vectors, 0.9)).foreach { case (what, df) =>
+      val conds = executed(df).collect { case j: BaseJoinExec => j.condition }.flatten
+      assert(conds.size == 1, s"$what: expected one conditional join, got $conds")
+      val cs = conjuncts(conds.head)
+      assert(!scoresKernel(cs.head) && scoresKernel(cs.last),
+        s"$what scores the kernel before the id test: ${conds.head}")
     }
   }
 

@@ -174,7 +174,7 @@ def main():
         lines.append("")
         lines.append("`REGRESSION?` rows deserve the committed-artifact cross-check: "
                      "`git log --oneline -- <query's source>` and re-run the query "
-                     "via `graft.tools.RunQuery` on the same data before believing it.")
+                     "via `graft.tools.Probe` on the same data before believing it.")
     else:
         lines.append("All compared queries are inside the committed spread band "
                      "(widened by the measured per-bucket noise floor).")
