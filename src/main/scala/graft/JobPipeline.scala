@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorKernels._
+import graft.functions.{PackedVectors, PairKernel}
 import graft.plans.Pipeline
 import graft.sources.ReportSink
 
@@ -14,11 +15,19 @@ import graft.sources.ReportSink
   * a re-run resumes from the last committed stage.
   *
   * Stage 4 picks its physical strategy by corpus size
-  * (GraftConf.exactPairCutoff): the exact kernel join below the cutoff
+  * (GraftConf.exactPairCutoff): the exact pair kernel below the cutoff
   * (the reference's own Faiss search is exhaustive within each probed
   * cell at its 90k scale), the LSH bucket-join candidate path + exact
   * verify above it — the same ANN-over-brute-force trade the reference
   * makes with its `IVF100,Flat` default (app/main.py:201-280, .env:7).
+  * The exact tier collects the stage-3 relation once into a packed
+  * broadcast (graft.functions.PairKernel: at most exactPairMaxBytes on
+  * disk, the bytes the old nested-loop join broadcast) and destroys it
+  * as soon as stage 4 commits, so no copy outlives the stage into the
+  * sinks or the next run. On the 1,275 × 384-d TF-IDF vectors of the
+  * 1,500-doc benchmark corpus the tier went from 2.9–3.6 µs of task time
+  * a pair (a BroadcastNestedLoopJoin testing `round(graft_cosine) >= t`
+  * on every pair) to 0.42–0.50 µs, the pack included (SCALE.md).
   */
 object JobPipeline {
 
@@ -75,15 +84,19 @@ object JobPipeline {
     // the cached TableStats relation over the staged parquet (footer
     // metadata + fs summary, never a data scan).
     val s3Stats = plans.TableStats.forParquet(spark, s"$workDir/s3_index")
-    val pairs = pipe.stage("s4_pairs") {
+    // the exact tier's packed matrix serves stage 4 only: the sinks read
+    // the committed parquet, so the broadcast dies with the commit
+    var packed: Option[Broadcast[PackedVectors]] = None
+    val pairs = try pipe.stage("s4_pairs") {
       if (s3Stats.rows <= GraftConf.exactPairCutoff(spark) &&
           s3Stats.bytes <= GraftConf.exactPairMaxBytes(spark)) {
-        exactPairs(indexed, threshold)
+        packed = Some(PairKernel.pack(indexed, "doc_id", "embedding"))
+        exactPairs(indexed, packed.get, threshold)
       } else {
         operators.Ann.lshNearDupFrame(indexed, "doc_id", "embedding",
           threshold, GraftConf.lshBucketLength(spark), GraftConf.lshNumTables(spark))
       }
-    }
+    } finally packed.foreach(_.destroy())
 
     val sorted = pairs.orderBy(col("sim").desc, col("id1"), col("id2"))
     // reference sinks: sorted CSV of pairs + a human sample report + the
@@ -96,16 +109,16 @@ object JobPipeline {
     sorted
   }
 
-  /** Stage 4's exact tier over (doc_id, embedding): every pair id1 < id2
-    * whose cosine, rounded to 4 places, is at least `threshold`. The
-    * threshold sits in the join condition after the id test, so the
-    * kernel scores each unordered pair once (a filter over the join
-    * would be pushed in ahead of it); survivors rescore in the select. */
-  private[graft] def exactPairs(indexed: DataFrame, threshold: Double): DataFrame = {
-    val a = indexed.select(col("doc_id").as("id1"), col("embedding").as("v1"))
-    val b = indexed.select(col("doc_id").as("id2"), col("embedding").as("v2"))
-    val sim = round(cosineFast(col("v1"), col("v2")), 4)
-    a.join(b, col("id1") < col("id2") && sim >= threshold)
+  /** Stage 4's exact tier over (doc_id, embedding), `packed` from
+    * `PairKernel.pack` over the same relation: every pair id1 < id2 whose
+    * cosine, rounded to 4 places, is at least `threshold`. The kernel
+    * keeps cos >= threshold − 1e-4, a superset (HALF_UP rounding moves a
+    * value by at most 5e-5), so Spark's `round` runs on survivors only. */
+  private[graft] def exactPairs(indexed: DataFrame, packed: Broadcast[PackedVectors],
+      threshold: Double): DataFrame = {
+    val sim = round(col("cos"), 4)
+    PairKernel.pairs(indexed, "doc_id", "embedding", packed, threshold - 1e-4)
+      .where(sim >= threshold)
       .select(col("id1"), col("id2"), sim.as("sim"))
   }
 

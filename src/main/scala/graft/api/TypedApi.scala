@@ -40,7 +40,7 @@ object TypedApi {
   def nearDupPairs(spark: SparkSession, sfDir: String, threshold: Double): Dataset[NearDupPair] = {
     import spark.implicits._
     graft.operators.Similarity
-      .nearDupPairs(spark, sfDir, threshold, prefilterLabel = false)
+      .nearDupPairs(spark, sfDir, threshold)
       .as[NearDupPair]
   }
 }

@@ -503,7 +503,7 @@ object Ann {
     "q150_multiprobe_recall",
     "J1b ext quality gate",
     (s, d) => {
-      val exact = Similarity.nearDupPairs(s, d, 0.35, prefilterLabel = false)
+      val exact = Similarity.nearDupPairs(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
       val ann = lshMultiProbeNearDup(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
@@ -516,7 +516,7 @@ object Ann {
     "q37_lsh_recall",
     "J1b quality gate",
     (s, d) => {
-      val exact = Similarity.nearDupPairs(s, d, 0.35, prefilterLabel = false)
+      val exact = Similarity.nearDupPairs(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
       val ann = lshNearDup(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
@@ -539,7 +539,7 @@ object Ann {
     "q57_ivf_pair_recall",
     "J1c quality gate",
     (s, d) => {
-      val exact = Similarity.nearDupPairs(s, d, 0.35, prefilterLabel = false)
+      val exact = Similarity.nearDupPairs(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
       val ann = ivfNearDup(s, d, 0.35, nprobe = 4)
         .select(col("id1").as("qid"), col("id2").as("nid"))

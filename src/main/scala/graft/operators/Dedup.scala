@@ -314,7 +314,7 @@ object Dedup {
     * list (the reference's "rebuild the index without the dupes" M5 advice
     * expressed as a plan). */
   def neardupSurvivors(s: SparkSession, d: String, threshold: Double): DataFrame = {
-    val pairs = Similarity.nearDupPairs(s, d, threshold, prefilterLabel = false)
+    val pairs = Similarity.nearDupPairs(s, d, threshold)
     val dropped = pairs.select(col("id2").as("vec_id")).distinct()
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.{GraftConf, GraftQuery, Tables}
 import graft.functions.VectorFunctions._
 import graft.functions.VectorKernels._
+import graft.functions.PairKernel
 
 /** Vector similarity operators — the reference's headline capability
   * (Faiss k-NN self-search + threshold near-dup pairs,
@@ -53,24 +54,19 @@ object Similarity {
 
   /** All near-duplicate pairs at cosine >= threshold, canonicalized
     * (id1 < id2) and deduplicated — the reference's end product
-    * (app/main.py:252-263: threshold 0.90, canonical pair set, sort).
-    * Label equi-prefilter plays the role of the IVF cell: vectors produced
-    * from the same cluster are the only plausible near-dups, so the join is
-    * an equi-join, not a cross join. The unfiltered exact variant is
-    * `entry`'s flagship on sf0.001. */
-  def nearDupPairs(s: SparkSession, d: String, threshold: Double,
-      prefilterLabel: Boolean): DataFrame = {
-    val base = graft.plans.Spread(Tables.embeddings(s, d))
-    val a = base.select(col("vec_id").as("id1"), col("label").as("lab1"), col("embedding").as("v1"))
-    val b = base.select(col("vec_id").as("id2"), col("label").as("lab2"), col("embedding").as("v2"))
-    val joinCond =
-      if (prefilterLabel) col("id1") < col("id2") && col("lab1") === col("lab2")
-      else col("id1") < col("id2")
-    // the kernel test goes last in the join condition, so it scores only
-    // id-ordered (same-label) pairs; survivors rescore in the select
-    val sim = cosineFast(col("v1"), col("v2"))
-    a.join(b, joinCond && sim >= threshold)
-      .select(col("id1"), col("id2"), round(sim, 4).as("sim"))
+    * (app/main.py:252-263: threshold 0.90, canonical pair set, sort) and
+    * `entry`'s flagship on sf0.001. The exact tier of
+    * [[nearDupPairsAuto]]: the shared pair kernel
+    * (graft.functions.PairKernel) tests the raw cosine against
+    * `threshold` and each unordered pair is scored once; survivors round
+    * to 4 places. Eager: building the frame packs the corpus (one Spark
+    * job) into a broadcast whose cleanup is left to the ContextCleaner,
+    * since the returned frame is lazy and may be evaluated many times. */
+  def nearDupPairs(s: SparkSession, d: String, threshold: Double): DataFrame = {
+    val base = Tables.embeddings(s, d)
+    val packed = PairKernel.pack(base, "vec_id", "embedding")
+    PairKernel.pairs(base, "vec_id", "embedding", packed, threshold)
+      .select(col("id1"), col("id2"), round(col("cos"), 4).as("sim"))
       .orderBy(col("sim").desc, col("id1"), col("id2"))
   }
 
@@ -117,7 +113,7 @@ object Similarity {
       s"threshold=$threshold (loose<${GraftConf.loosePairThreshold(s)}), " +
       s"avgRowBytes=${st.avgRowBytes.toLong} -> $tier")
     tier match {
-      case "exact" => nearDupPairs(s, d, threshold, prefilterLabel = false)
+      case "exact" => nearDupPairs(s, d, threshold)
       case "ivf" => Ann.ivfNearDup(s, d, threshold, GraftConf.ivfNprobe(s))
       case "multiprobe-lsh" => Ann.lshMultiProbeNearDup(s, d, threshold)
       case "lsh" => Ann.lshNearDup(s, d, threshold)
@@ -188,7 +184,7 @@ object Similarity {
   val q31NearDupPairs = GraftQuery(
     "q31_neardup_pairs",
     "D5,J1a,P5,P6,D4,T1,F9,F10",
-    (s, d) => nearDupPairs(s, d, threshold = 0.35, prefilterLabel = false),
+    (s, d) => nearDupPairs(s, d, threshold = 0.35),
     Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings)
       SELECT a.vec_id AS id1, b.vec_id AS id2,
         round(list_cosine_similarity(a.embedding, b.embedding), 4) AS sim

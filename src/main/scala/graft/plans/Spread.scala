@@ -14,7 +14,11 @@ import org.apache.spark.sql.DataFrame
   * on one core while the other 31 idle (measured: q163's edge build ran
   * its 9M-cosine stage as a single 1.7 s task; spread, the same stage
   * is 32 × ~60 ms). `spread` redistributes the streamed side across
-  * `defaultParallelism` before the kernel join.
+  * `defaultParallelism` before the kernel join. The exact pair tiers
+  * (graft.functions.PairKernel) stream `Spread(relation)` row by row
+  * against a packed broadcast of the same relation instead of joining:
+  * a row scores only the larger ids, so the work per row varies, and the
+  * round-robin spread deals small and large ids alike to every task.
   *
   * Scale safety: every call site is an EXACT tier that the stats
   * routers only admit under the exact cutoffs (rows ≤ knnExactCutoff /

@@ -245,7 +245,7 @@ class GraftConfSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select(col("id1"), col("id2")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Similarity.nearDupPairs(spark, sfTiny, 0.35, prefilterLabel = false))
+    val exact = pairs(Similarity.nearDupPairs(spark, sfTiny, 0.35))
     assert(exact.nonEmpty)
     val viaMultiProbe = withConf("spark.graft.pairs.exactCutoff", "0") {
       pairs(Similarity.nearDupPairsAuto(spark, sfTiny, 0.35))

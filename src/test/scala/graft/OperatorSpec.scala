@@ -19,7 +19,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("nearDupPairs: canonical (id1 < id2), no dups, all >= threshold") {
-    val rows = Similarity.nearDupPairs(spark, sfTiny, 0.3, prefilterLabel = false).collect()
+    val rows = Similarity.nearDupPairs(spark, sfTiny, 0.3).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => r.getLong(0) < r.getLong(1)))
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).distinct.length == rows.length)
@@ -139,7 +139,7 @@ class OperatorSpec extends SparkSpec {
 
   test("neardup survivors: survivors + dominated = all; no survivor dominated") {
     val total = Tables.embeddings(spark, sfTiny).count()
-    val pairs = Similarity.nearDupPairs(spark, sfTiny, 0.35, prefilterLabel = false)
+    val pairs = Similarity.nearDupPairs(spark, sfTiny, 0.35)
     val dominated = pairs.select(col("id2")).distinct().count()
     val survivors = Dedup.neardupSurvivors(spark, sfTiny, 0.35).count()
     assert(survivors == total - dominated)
@@ -215,7 +215,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("IVF near-dup pair recall >= 0.9 vs exact (tiny)") {
-    val exact = Similarity.nearDupPairs(spark, sfTiny, 0.35, prefilterLabel = false)
+    val exact = Similarity.nearDupPairs(spark, sfTiny, 0.35)
       .select(col("id1"), col("id2"))
     val ann = Ann.ivfNearDup(spark, sfTiny, 0.35, nprobe = 4)
       .select(col("id1"), col("id2"))
@@ -225,7 +225,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("LSH near-dup recall >= 0.9 vs exact (tiny)") {
-    val exact = Similarity.nearDupPairs(spark, sfTiny, 0.35, prefilterLabel = false)
+    val exact = Similarity.nearDupPairs(spark, sfTiny, 0.35)
       .select(col("id1"), col("id2"))
     val ann = Ann.lshNearDup(spark, sfTiny, 0.35).select(col("id1"), col("id2"))
     val total = exact.count()
@@ -245,8 +245,7 @@ class OperatorSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     assert(Ann.assignCells(spark, sfTiny, empty).count() == 0)
     // unsatisfiable threshold -> empty pair relation (cos <= 1 always)
-    assert(Similarity.nearDupPairs(spark, sfTiny, threshold = 1.1,
-      prefilterLabel = false).count() == 0)
+    assert(Similarity.nearDupPairs(spark, sfTiny, threshold = 1.1).count() == 0)
   }
 
   test("rangeJoinBinned equals the naive theta join (bucket replication is exact)") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions._
+
 /** The README's determinism claim, pinned: registered results must not
   * depend on the session's shuffle-partition count. One representative
   * query per operator family runs under two unusual partition counts
@@ -14,6 +16,8 @@ class PartitionInvarianceSpec extends SparkSpec {
   // connected components, typed aggregator, heavy hitters, selection,
   // priority sample, HLL sketch, prefix join, HRW shard, equi-depth
   private val names = Seq(
+    // the exact pair kernel (q31) and the anti-join over its pairs (q54)
+    "q31_neardup_pairs", "q54_neardup_survivors",
     "q01_pricing_summary", "q04_topk_per_group", "q50_exact_dedup",
     "q53_ngram_jaccard", "q64_dup_clusters", "q122_topk_aggregator",
     "q132_heavy_hitters", "q145_order_statistics", "q147_priority_sample",
@@ -75,6 +79,23 @@ class PartitionInvarianceSpec extends SparkSpec {
         assert(a.nonEmpty, s"$n vacuous at sf0.001")
       }
     } finally spark.conf.set(key, orig)
+  }
+
+  test("pipeline stage 4's exact pairs identical under shuffle.partitions = 3 and 17") {
+    val key = "spark.sql.shuffle.partitions"
+    val orig = spark.conf.get(key)
+    val vectors = Tables.embeddings(spark, sfTiny)
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val packed = graft.functions.PairKernel.pack(vectors, "doc_id", "embedding")
+    def run(p: String) = {
+      spark.conf.set(key, p)
+      JobPipeline.exactPairs(vectors, packed, 0.35).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    }
+    try {
+      val a = run("3")
+      assert(a.nonEmpty && a == run("17"), "stage 4 depends on the shuffle partition count")
+    } finally { spark.conf.set(key, orig); packed.destroy() }
   }
 
   test("rebalanceCells: repaired assignment AND cell numbering invariant under partitioning (ADVICE r10)") {

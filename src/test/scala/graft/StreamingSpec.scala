@@ -58,7 +58,7 @@ class StreamingSpec extends SparkSpec {
       .select(least(col("vec_id"), col("cid")).as("id1"),
         greatest(col("vec_id"), col("cid")).as("id2"))
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = operators.Similarity.nearDupPairs(spark, sfTiny, 0.35, prefilterLabel = false)
+    val exact = operators.Similarity.nearDupPairs(spark, sfTiny, 0.35)
       .select(col("id1"), col("id2")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.count(streamed.contains).toDouble / exact.size

@@ -17,7 +17,7 @@ class TypedApiSpec extends SparkSpec {
     val typed = TypedApi.nearDupPairs(spark, sfTiny, 0.35).collect()
       .map(p => (p.id1, p.id2, p.sim)).toSet
     val untyped = operators.Similarity
-      .nearDupPairs(spark, sfTiny, 0.35, prefilterLabel = false).collect()
+      .nearDupPairs(spark, sfTiny, 0.35).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(typed == untyped && typed.nonEmpty)
   }
