@@ -54,8 +54,9 @@ object JobPipeline {
         .select(col("doc_id"), col("text"))
     }
 
-    // Stage 2 — embed: deterministic TF-IDF pipeline, unit-normalized
-    // (app/generate_embeddings.py:25-50; M1 stand-in)
+    // Stage 2 — embed: deterministic TF-IDF, unit-normalized
+    // (app/generate_embeddings.py:25-50; M1 stand-in): one fit job, or a
+    // one-file read from the model store, then the kernel in the write
     val embedded = pipe.stage("s2_embed") {
       // the model is fitted on stage 1's output, so it is cached and
       // persisted under that directory: the store fingerprints its parquet

@@ -1,43 +1,46 @@
 package graft.operators
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
-import org.apache.spark.ml.feature.{HashingTF, IDF, Normalizer, RegexTokenizer}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftConf, GraftQuery, Tables}
-import graft.functions.GramianAggregator
+import graft.functions.{GramianAggregator, TfIdf, TfIdfModel}
 
 /** M1 — text -> embedding. The reference encodes with a sentence
   * transformer (app/generate_embeddings.py:25-50, all-MiniLM-L6-v2,
   * 384-d L2-normalized float32); a transformer needs an external model
-  * server, so the engine's public-knowledge stand-in is the classic
-  * sparse-projection pipeline: RegexTokenizer -> HashingTF -> IDF ->
-  * Normalizer(p=2), dimension from GraftConf.embeddingDim (reference
-  * default 384; specs pin 64 to match the synthetic embeddings table).
-  * The contract the rest of the engine relies on is
-  * identical: a deterministic, L2-normalized fixed-dim vector per
-  * document, co-located with its key (no positional id_map — the
-  * reference's fragile parallel-array design, app/vector_search.py:289-292,
-  * is structurally impossible here).
+  * server, so the engine's public-knowledge stand-in is classic hashed
+  * TF-IDF, L2-normalized, dimension from GraftConf.embeddingDim
+  * (reference default 384; specs pin 64 to match the synthetic
+  * embeddings table). It runs on the engine's own kernel
+  * (graft.functions.TfIdf: one `treeAggregate` fit, one `graft_tfidf`
+  * expression emitting ARRAY<DOUBLE>), bit-identical to the MLlib chain
+  * RegexTokenizer -> HashingTF -> IDF -> Normalizer(p=2) ->
+  * vector_to_array it replaced; the fitted model is (dim, numDocs,
+  * docFreq) and persists as one small file. The contract the rest of the
+  * engine relies on is identical: a deterministic, L2-normalized
+  * fixed-dim vector per document, co-located with its key (no positional
+  * id_map — the reference's fragile parallel-array design,
+  * app/vector_search.py:289-292, is structurally impossible here).
   *
   * Not SQL-expressible (murmur3 feature hashing), so no DuckDB oracle;
   * EmbeddingSpec asserts unit norms, determinism, and that near-dup text
-  * pairs embed closer than random pairs. */
+  * pairs embed closer than random pairs; TfIdfSpec compares every bit
+  * with the MLlib chain. */
 object Embedding {
 
   /** Configured output dimension (spark.graft.embedding.dim). */
   def dim(s: SparkSession): Int = GraftConf.embeddingDim(s)
 
   // fit-once-embed-many (S6 parity for M1, same policy as Ann's
-  // quantizer): IDF's fit is an extra full corpus scan, so the fitted
-  // PipelineModel is an index artifact, not part of any single query.
-  // One fit per (session, dataset, dim) per JVM; with
-  // spark.graft.index.dir set, one fit per CLUSTER, loaded thereafter
-  // (reference persists the encoder output the same way,
-  // app/generate_embeddings.py + vector_search.py:207-294).
+  // quantizer): the IDF fit is an extra full corpus scan, so the fitted
+  // model is an index artifact, not part of any single query. One fit
+  // per (session, dataset, dim) per JVM; with spark.graft.index.dir set,
+  // one fit per CLUSTER, loaded thereafter (reference persists the
+  // encoder output the same way, app/generate_embeddings.py +
+  // vector_search.py:207-294).
   private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), PipelineModel]
+    scala.collection.concurrent.TrieMap.empty[(String, String), TfIdfModel]
 
   private def sessionKey(s: SparkSession): String =
     System.identityHashCode(s).toString
@@ -50,34 +53,27 @@ object Embedding {
     modelCache.clear(); w2vCache.clear(); pcaCache.clear()
   }
 
-  private def fitModel(docs: DataFrame, dim: Int): PipelineModel = {
+  private def fitModel(docs: DataFrame, dim: Int): TfIdfModel = {
     fitCount.incrementAndGet()
-    new Pipeline().setStages(Array(
-      new RegexTokenizer().setInputCol("text").setOutputCol("toks")
-        .setPattern("\\s+").setToLowercase(true),
-      new HashingTF().setInputCol("toks").setOutputCol("tf").setNumFeatures(dim),
-      new IDF().setInputCol("tf").setOutputCol("tfidf"),
-      new Normalizer().setInputCol("tfidf").setOutputCol("emb").setP(2.0)))
-      .fit(docs)
+    TfIdf.fit(docs, "text", dim)
   }
 
   /** The fitted model for (dataset key, dim): session cache first, then
     * the persisted artifact, then fit (and save if persistence is on).
     * `key=None` (anonymous frame) always fits — there is no sound cache
     * identity for arbitrary intermediate frames. */
-  private def model(docs: DataFrame, key: Option[String], dim: Int): PipelineModel = {
+  private def model(docs: DataFrame, key: Option[String], dim: Int): TfIdfModel = {
     val s = docs.sparkSession
     key match {
       case Some(k) =>
         graft.FitTiming.cachedOrFit(modelCache, (sessionKey(s), s"$k@dim=$dim"))(
-          ModelStore.loadOrFit(s,
-            ModelStore.artifactPath(s, "embed_pipeline", k, s"dim=$dim"),
-            PipelineModel.load)(fitModel(docs, dim)))
+          ModelStore.loadOrFitFile(s, ModelStore.artifactPath(s, "tfidf", k, s"dim=$dim"),
+            TfIdfModel.read, TfIdfModel.write)(fitModel(docs, dim)))
       case None => fitModel(docs, dim)
     }
   }
 
-  /** Fit-or-load + apply the embedding pipeline; (doc_id, embedding). */
+  /** Fit-or-load + apply the embedding; (doc_id, embedding). */
   def embed(s: SparkSession, d: String): DataFrame =
     embedDocs(Tables.documents(s, d).select(col("doc_id"), col("text")), Some(d))
 
@@ -87,8 +83,7 @@ object Embedding {
     * persisted under that identity. */
   def embedDocs(docs: DataFrame, cacheKey: Option[String] = None): DataFrame = {
     val d = GraftConf.embeddingDim(docs.sparkSession)
-    model(docs, cacheKey, d).transform(docs)
-      .select(col("doc_id"), vector_to_array(col("emb")).as("embedding"))
+    docs.select(col("doc_id"), TfIdf.embed(col("text"), model(docs, cacheKey, d)).as("embedding"))
   }
 
   /** Alternative M1 backend: Word2Vec (dense learned vectors, the other
@@ -125,11 +120,11 @@ object Embedding {
   }
 
   /** q39: embedding-stage invariant profile — the vectors themselves
-    * are murmur3-HashingTF outputs no SQL engine can replay, but the
+    * are murmur3-hashed TF-IDF outputs no SQL engine can replay, but the
     * pipeline's CONTRACT is fully checkable: every document embeds
     * (n_docs), every embedding is exactly conf-dim wide (n_dim_ok), and
-    * every vector is unit-norm or exactly zero (n_norm_ok — the
-    * Normalizer stage; zero when IDF kills every term of a doc). The
+    * every vector is unit-norm or exactly zero (n_norm_ok — the L2
+    * normalization; zero when IDF kills every term of a doc). The
     * Spark side computes all three from the real vectors; the DuckDB
     * oracle states each must equal count(*) of documents — the
     * shape-invariant oracle round 6 asked for. Per-vector assertions

@@ -1,12 +1,14 @@
 package graft.operators
 
+import java.io.{DataInputStream, DataOutputStream}
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.sql.SparkSession
 import graft.GraftConf
 
 /** S6 model persistence, shared by every fitted-model operator (the ANN
-  * quantizer and LSH tables in [[Ann]], the M1 embedding pipeline in
+  * quantizer and LSH tables in [[Ann]], the M1 TF-IDF model in
   * [[Embedding]]): with `spark.graft.index.dir` set, a fit is saved once
   * and every later JVM loads the artifact instead of refitting — the
   * Spark-native form of the reference's faiss.write_index/read_index
@@ -69,5 +71,33 @@ private[graft] object ModelStore {
       case Some(p) if artifactExists(s, p) => load(p)
       case Some(p) => val m = fit; m.write.overwrite().save(p); m
       case None => fit
+    }
+
+  /** Single-file form for a model small enough to stream (the M1 TF-IDF
+    * model): read the file at `path` if persistence is on and it exists;
+    * otherwise fit and, when persistence is on, write a temp file beside
+    * `path` and rename it into place. The rename is the commit, so a
+    * crashed write leaves only a temp file that no reader opens and the
+    * next caller refits. Neither side runs a Spark job: an MLlib save
+    * costs a metadata job per stage plus a data job, and a load more. */
+  def loadOrFitFile[M](s: SparkSession, path: Option[String], read: DataInputStream => M,
+      write: (M, DataOutputStream) => Unit)(fit: => M): M =
+    path match {
+      case None => fit
+      case Some(p) =>
+        val file = new Path(p)
+        val fs = file.getFileSystem(s.sparkContext.hadoopConfiguration)
+        if (fs.exists(file)) {
+          val in = fs.open(file)
+          try read(in) finally in.close()
+        } else {
+          val m = fit
+          val tmp = new Path(file.getParent, s".${file.getName}.${java.util.UUID.randomUUID()}.tmp")
+          val out = fs.create(tmp, true)
+          try write(m, out) finally out.close()
+          // a concurrent writer may have committed the same fit first
+          if (!fs.rename(tmp, file)) fs.delete(tmp, false)
+          m
+        }
     }
 }

@@ -61,12 +61,20 @@ object Similarity {
     * `threshold` and each unordered pair is scored once; survivors round
     * to 4 places. Eager: building the frame packs the corpus (one Spark
     * job) into a broadcast whose cleanup is left to the ContextCleaner,
-    * since the returned frame is lazy and may be evaluated many times. */
+    * since the returned frame is lazy and may be evaluated many times.
+    *
+    * The global sort's range partitioner samples its input in a job of
+    * its own before the sort's map stage reads that input again; over the
+    * kernel directly, every pair was scored twice. Behind a hash exchange
+    * the sample reads shuffle output instead. The exchange is on id2, the
+    * key q54's `distinct` groups by, so that plan (which drops the sort)
+    * shuffles no more often than before. */
   def nearDupPairs(s: SparkSession, d: String, threshold: Double): DataFrame = {
     val base = Tables.embeddings(s, d)
     val packed = PairKernel.pack(base, "vec_id", "embedding")
     PairKernel.pairs(base, "vec_id", "embedding", packed, threshold)
       .select(col("id1"), col("id2"), round(col("cos"), 4).as("sim"))
+      .repartition(col("id2"))
       .orderBy(col("sim").desc, col("id1"), col("id2"))
   }
 

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
 
 /** Idempotent stage runner — the reference's file-existence stage cache
   * (S10: app/main.py:110-123 preprocess, :130-141 embeddings, :177-198
@@ -32,15 +32,20 @@ final class Pipeline(spark: SparkSession, root: String) {
     fs(m).exists(m)
   }
 
-  /** Run (or skip) a stage: returns the materialized stage output. */
-  def stage(name: String)(compute: => DataFrame): DataFrame = {
-    if (!isDone(name)) {
-      compute.write.mode(SaveMode.Overwrite).parquet(dir(name))
+  /** Run (or skip) a stage: returns the materialized stage output. A
+    * stage computed in this run is read back with the schema it was
+    * written with, as the parquet reader reports it (every field
+    * nullable), so no schema-inference job runs; only a resumed stage
+    * infers its schema from the files. */
+  def stage(name: String)(compute: => DataFrame): DataFrame =
+    if (isDone(name)) spark.read.parquet(dir(name))
+    else {
+      val df = compute
+      df.write.mode(SaveMode.Overwrite).parquet(dir(name))
       val m = doneMarker(name)
       fs(m).create(m, true).close()
+      spark.read.schema(GraftColumnBridge.asNullable(df.schema)).parquet(dir(name))
     }
-    spark.read.parquet(dir(name))
-  }
 
   /** Drop a stage's materialization (the M5 "rebuild the index" path). */
   def invalidate(name: String): Unit = {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end composed pipeline (the reference's main.py equivalent). */
@@ -126,5 +127,39 @@ class JobPipelineSpec extends SparkSpec {
       assert(stale == 0, s"stale vectors out of ${want.size}: " +
         "the kept store served the model fitted on the previous corpus")
     } finally spark.conf.unset("spark.graft.index.dir")
+  }
+
+  test("a stage computed in this run reads back with the schema a resumed run infers") {
+    val work = Files.createTempDirectory("graft_jobpipe_schema").toString
+    val docs = Tables.documents(spark, sfTiny).select(col("doc_id"), col("text"))
+    // the s1 and s2 shapes (s2's vector array has non-null elements) and
+    // non-null nested fields
+    val stages = Seq[(String, () => DataFrame)](
+      "s1" -> (() => docs),
+      "s2" -> (() => operators.Embedding.embedDocs(docs)),
+      "nested" -> (() => spark.range(3).select(col("id"), array(col("id")).as("a"),
+        struct(col("id").as("x")).as("s"), map(lit("k"), col("id")).as("m"), lit(1.5).as("c"))))
+    stages.foreach { case (name, compute) =>
+      val fresh = new plans.Pipeline(spark, work).stage(name)(compute())
+      val resumed = new plans.Pipeline(spark, work).stage(name)(fail(s"$name was recomputed"))
+      assert(fresh.schema == resumed.schema, s"$name: ${fresh.schema.treeString} vs ${resumed.schema.treeString}")
+      assert(fresh.count() == resumed.count())
+    }
+  }
+
+  test("one fresh pipeline run on sfTiny with a fresh model store runs at most 19 Spark jobs") {
+    // a tripwire for per-stage writer or schema-inference jobs coming
+    // back: 28 jobs before the native TF-IDF model and schema read-back
+    val root = Files.createTempDirectory("graft_jobpipe_jobs").toString
+    spark.conf.set("spark.graft.index.dir", s"$root/store")
+    operators.Embedding.clearCaches()
+    operators.Ann.clearCaches()
+    try {
+      val jobs = jobsDuring(JobPipeline.run(spark, sfTiny, s"$root/work", threshold = 0.5))
+      assert(jobs <= 19, s"$jobs Spark jobs")
+    } finally {
+      spark.conf.unset("spark.graft.index.dir")
+      operators.Embedding.clearCaches()
+    }
   }
 }

@@ -53,11 +53,16 @@ class PlanSpec extends SparkSpec {
         assert(Nodes.find(plan)(_.expressions.exists(_.exists(_.isInstanceOf[PairScores]))).isDefined,
           s"$what does not plan the pair kernel:\n$plan")
       }
-      // stage 4 has no sort over the kernel, so one evaluation is one pass
+      // one evaluation is one pass: stage 4 has no sort over the kernel,
+      // and q31 puts an exchange between the kernel and its global sort
       PairKernel.scored.reset()
       JobPipeline.exactPairs(vectors, packed, 0.9).collect()
       assert(PairKernel.scored.sum == n * (n - 1) / 2,
-        s"scored ${PairKernel.scored.sum} pairs of $n distinct ids")
+        s"stage 4 scored ${PairKernel.scored.sum} pairs of $n distinct ids")
+      PairKernel.scored.reset()
+      Registry.byName("q31_neardup_pairs").run(spark, sfTiny).collect()
+      assert(PairKernel.scored.sum == n * (n - 1) / 2,
+        s"q31 scored ${PairKernel.scored.sum} pairs of $n distinct ids")
     } finally packed.destroy()
   }
 

@@ -29,4 +29,20 @@ abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpecBase.spark
   def sfTiny: String = SparkSpecBase.sfTiny
   def sfSmall: String = SparkSpecBase.sfSmall
+
+  /** Spark jobs started while `body` runs, adaptive query stages
+    * included; the listener bus is drained on both sides. */
+  def jobsDuring(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.GraftListenerBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }
