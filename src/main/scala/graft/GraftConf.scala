@@ -273,13 +273,16 @@ object GraftConf {
         s"spark.graft.hybrid.fanoutGate must be exact|estimate, got $other")
     }
 
-  /** Staging root for streamed-state harness runs that accumulate
-    * micro-batch output between triggers (the q225/q227 index-add
-    * monitors). Unset = a driver-local temp dir, which is correct on
-    * local[*] only; on a real cluster set this to a shared-FS path
-    * (HDFS/S3A) so every executor can write the batch partitions — the
-    * same contract as the checkpoint dirs of the other streamed
-    * pairings. */
+  /** Staging root for streamed-state runs that accumulate micro-batch
+    * output between triggers: every dir made by
+    * StreamingJobs.stagingDir — the state dirs of the drained streamed
+    * twins (StreamingJobs.drain: q134, q153-q155, q159, q168, q174,
+    * q180, q185, q198, q204, q209, q231), the q225 index-add monitor,
+    * the q227 standing loop and the no-store fallback of the q193/q194
+    * curation pipeline. Unset = a driver-local temp dir, which is
+    * correct on local[*] only; on a real cluster set this to a
+    * shared-FS path (HDFS/S3A) so every executor can write the batch
+    * partitions. */
   def streamStageDir(s: SparkSession): Option[String] =
     s.conf.getOption("spark.graft.stream.stageDir")
 

@@ -1384,29 +1384,11 @@ object Ann {
     * monitor row carries q223's full oracle — the standing form of the
     * index-health check, per-trigger cost one batch assign + one
     * partition write, never a corpus rescan. */
-  /** Staging root for a streamed-state harness run: rooted under
-    * spark.graft.stream.stageDir when set (a shared-FS path every
-    * executor can write — the cluster contract, same as the other
-    * pairings' checkpoint dirs), else a driver-local temp dir (correct
-    * on local[*] only). The suffix is unique per run so concurrent
-    * harness runs never share state. */
-  private[graft] def stagingDir(s: SparkSession, prefix: String): String =
-    GraftConf.streamStageDir(s) match {
-      case Some(root) =>
-        val p = s"$root/${prefix}_${java.util.UUID.randomUUID().toString.take(12)}"
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(hp)
-        p
-      case None =>
-        java.nio.file.Files.createTempDirectory(prefix).toString
-    }
-
   def streamedCellBalance(s: SparkSession, d: String, nBatches: Int): DataFrame = {
     import s.implicits._
     require(nBatches >= 1)
     val idx = ivfIndexFull(s, d) // fit/load BEFORE the stream (frozen)
-    val outDir = stagingDir(s, "graft_idxadd")
-    val row = try {
+    val row = StreamingJobs.withStagingDir(s, "graft_idxadd") { outDir =>
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       def slice(i: Int) = emb.filter(pmod(col("vec_id"), lit(nBatches)) === i)
       (0 until nBatches).foreach { i =>
@@ -1420,9 +1402,6 @@ object Ann {
       val n = assigned.count()
       val skew = skewVsBalanced(assigned, cells)
       (n, cells, skew >= 1.0, skew > skewThreshold(s))
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(outDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
     Seq(row).toDF("n_vectors", "n_cells", "skew_ge_balanced", "skew_exceeds")
   }
@@ -1587,7 +1566,7 @@ object Ann {
     // re-fit of the quantizer must miss this cache too
     standingLoopCache.getOrElseUpdate(
       (sessionKey(s), s"$d@n=$nBatches,post=$postBatches,thr=$thr,cells=$cells0"), {
-        val stage = stagingDir(s, "graft_monrep")
+        val stage = StreamingJobs.stagingDir(s, "graft_monrep")
         try runStandingLoop(s, d, nBatches, postBatches, stage)
         catch {
           case e: Throwable =>

@@ -645,8 +645,13 @@ object Dedup {
     * graph are their own singleton cluster) and the cluster size. Edges
     * come from the composed q59 pipeline (MinHash candidates -> exact
     * Jaccard >= threshold). */
-  def dupClusters(s: SparkSession, d: String, threshold: Double): DataFrame = {
-    val comp = ccLabels(s, d, threshold)
+  def dupClusters(s: SparkSession, d: String, threshold: Double): DataFrame =
+    labelClusters(s, d, ccLabels(s, d, threshold))
+
+  /** Every document labeled from a (doc_id, label) component relation:
+    * documents outside it are their own singleton cluster; adds the
+    * cluster size, ordered by doc_id. */
+  private def labelClusters(s: SparkSession, d: String, comp: DataFrame): DataFrame = {
     val labeled = Tables.documents(s, d).select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
@@ -1334,30 +1339,12 @@ object Dedup {
     * posting join" job needs. Mirrors q134's streamed/batch pairing. */
   def streamedDupClusters(s: SparkSession, d: String, threshold: Double,
       nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_cc_state").toString
-    val pairs = sketchVerifiedPairs(s, d, threshold)
-      .select(col("id1"), col("id2")).localCheckpoint(true)
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val comp = try {
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyCcBatch(s,
-          pairs.filter(pmod(col("id1"), lit(nBatches)) === i), i.toLong, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .withColumnRenamed("v", "doc_id").localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val pairs = graft.Mat(sketchVerifiedPairs(s, d, threshold).select(col("id1"), col("id2")))
+    val comp = graft.streaming.StreamingJobs.drain(s, "graft_cc_state", pairs, "id1",
+      nBatches) {
+      (b, id, dir) => graft.streaming.StreamingJobs.applyCcBatch(s, b, id, dir)
     }
-    val labeled = Tables.documents(s, d).select(col("doc_id"))
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
-    val sizes = labeled.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labeled.join(sizes, Seq("cluster_id"))
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-      .orderBy(col("doc_id"))
+    labelClusters(s, d, comp.withColumnRenamed("v", "doc_id"))
   }
 
   val q153StreamedCc = GraftQuery(

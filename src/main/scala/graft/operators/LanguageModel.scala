@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
+import graft.streaming.StreamingJobs
 
 /** N-gram language-model perplexity scoring — the CCNet/Gopher quality
   * gate the heuristic battery (q41) and the distilled classifier (q131)
@@ -378,21 +379,9 @@ object LanguageModel {
     * fingerprint-guard as there. */
   def streamedDocSurprisal(s: SparkSession, d: String,
       nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_lm_state").toString
-    val c2 = try {
-      val train = Tables.documents(s, d).filter(col("lang") === "en")
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyLmCountBatch(s,
-          train.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          i.toLong, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val train = Tables.documents(s, d).filter(col("lang") === "en")
+    val c2 = StreamingJobs.drain(s, "graft_lm_state", train, "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyLmCountBatch(s, b, id, dir)
     }
     scoreWith(corpusTf(s, d), modelFromCounts(c2))
   }

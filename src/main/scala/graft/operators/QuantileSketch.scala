@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
+import graft.streaming.StreamingJobs
 
 /** Mergeable QUANTILE sketch — the fourth leg of the engine's
   * mergeable-summary tier (q132 Misra-Gries heavy hitters, q151
@@ -166,26 +167,12 @@ object QuantileSketch {
     * then probed identically. Carries q230's full oracle: the drained
     * stream's sketch must be bit-identical to the one-shot batch sketch. */
   def streamedHdrQuantiles(s: SparkSession, d: String, nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_hdr_state").toString
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val sketch = try {
-      val vals = withBucket(cents(s, d))
-        .withColumn("part", pmod(col("v"), lit(nBatches)))
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyAggBatch(s,
-          vals.filter(col("part") === i), i.toLong,
-          key = "bucket_id", valueCol = "v", stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .select(col("bucket_id"), col("cnt").as("c"))
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val state = StreamingJobs.drain(s, "graft_hdr_state", withBucket(cents(s, d)),
+      "v", nBatches) {
+      (b, id, dir) => StreamingJobs.applyAggBatch(s, b, id,
+        key = "bucket_id", valueCol = "v", dir)
     }
-    probe(s, cents(s, d), sketch)
+    probe(s, cents(s, d), state.select(col("bucket_id"), col("cnt").as("c")))
   }
 
   val q231StreamedHdrQuantiles = GraftQuery(

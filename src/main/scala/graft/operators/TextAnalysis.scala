@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
+import graft.streaming.StreamingJobs
 
 /** Text analysis suite (north-star: lang-ID, quality scoring, token counts,
   * fingerprinting) over the `documents` table. Everything is built-in
@@ -377,25 +378,15 @@ object TextAnalysis {
     * survives a corpus that never stops growing. */
   def streamedHeavyHitters(s: SparkSession, d: String, denom: Int,
       nBatches: Int): DataFrame = {
-    require(denom >= 1 && nBatches >= 1)
+    require(denom >= 1)
     val k = denom // k+1 > denom: the catch bound (see scaladoc)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_hh_state").toString
     val docs = Tables.documents(s, d)
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val (total, candTerms) = try {
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyMgBatch(s,
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          "text", i.toLong, k, stateDir)
-      }
-      val state = graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-      (state.agg(max(col("total_n"))).head().getLong(0),
-        state.filter(col("term").isNotNull)
-          .select(col("term")).collect().map(_.getString(0)).toSeq)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val state = StreamingJobs.drain(s, "graft_hh_state", docs, "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyMgBatch(s, b, "text", id, k, dir)
     }
+    val total = state.agg(max(col("total_n"))).head().getLong(0)
+    val candTerms = state.filter(col("term").isNotNull)
+      .select(col("term")).collect().map(_.getString(0)).toSeq
     val minCount = (total + denom - 1) / denom
     import s.implicits._
     val cands = candTerms.toDF("term")
@@ -1732,22 +1723,10 @@ object TextAnalysis {
     * bit-identical to the one-shot batch sketch — additivity proven
     * cross-engine, the q134/q132 and q153/q64 pairing applied to CMS. */
   def streamedCms(s: SparkSession, d: String, nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
     val depth = 4; val width = 1024
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_cms_state").toString
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val sketch = try {
-      val docs = Tables.documents(s, d)
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyCmsBatch(s,
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), "text",
-          i.toLong, depth, width, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val sketch = StreamingJobs.drain(s, "graft_cms_state", Tables.documents(s, d),
+      "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyCmsBatch(s, b, "text", id, depth, width, dir)
     }
     cmsProbe(s, d, sketch, depth, width)
   }
@@ -1857,22 +1836,10 @@ object TextAnalysis {
     * q167's full oracle: the drained stream's registers must be
     * bit-identical to the one-shot batch sketch. */
   def streamedHll(s: SparkSession, d: String, nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
     val m = 256
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_hll_state").toString
-    val docs = Tables.documents(s, d)
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val state = try {
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyHllBatch(s,
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), "text",
-          i.toLong, m, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val state = StreamingJobs.drain(s, "graft_hll_state", Tables.documents(s, d),
+      "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyHllBatch(s, b, "text", id, m, dir)
     }
     hllFill(s, state, m)
   }
@@ -1938,26 +1905,11 @@ object TextAnalysis {
     * batchId-idempotent AND merge-idempotent like q168). Carries q173's
     * full oracle: the drained stream's per-day registers must be
     * bit-identical to the one-shot batch relation. */
-  def streamedWindowedHll(s: SparkSession, d: String, nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
-    val m = 64
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_whll_state").toString
-    val ev = Tables.eventsWithTs(s, d)
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val state = try {
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyDayHllBatch(s,
-          ev.filter(pmod(col("event_id"), lit(nBatches)) === i),
-          i.toLong, m, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
-    }
-    state.orderBy(col("day"), col("reg"))
-  }
+  def streamedWindowedHll(s: SparkSession, d: String, nBatches: Int): DataFrame =
+    StreamingJobs.drain(s, "graft_whll_state", Tables.eventsWithTs(s, d),
+      "event_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyDayHllBatch(s, b, id, 64, dir)
+    }.orderBy(col("day"), col("reg"))
 
   val q174StreamedWindowedHll = GraftQuery(
     "q174_streamed_windowed_hll",
@@ -2097,25 +2049,12 @@ object TextAnalysis {
     * State is the class-vocabulary relation — bounded by vocab × classes
     * like the q135 index's df relation, not by corpus rows. */
   def streamedClassTfidf(s: SparkSession, d: String, k: Int,
-      nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_ctf_state").toString
-    val docs = Tables.documents(s, d)
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val state = try {
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyClassTfBatch(s,
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), "source",
-          i.toLong, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
-    }
-    classTfidfFromCounts(state, k)
-  }
+      nBatches: Int): DataFrame =
+    classTfidfFromCounts(
+      StreamingJobs.drain(s, "graft_ctf_state", Tables.documents(s, d),
+        "doc_id", nBatches) {
+        (b, id, dir) => StreamingJobs.applyClassTfBatch(s, b, "source", id, dir)
+      }, k)
 
   val q172ClassTfidf = GraftQuery(
     "q172_class_tfidf",
@@ -2157,21 +2096,9 @@ object TextAnalysis {
     * (the reservoir-sample-over-a-stream answer, deterministic). */
   def streamedPrioritySample(s: SparkSession, d: String, k: Int,
       nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_samp_state").toString
-    val docs = Tables.documents(s, d)
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val state = try {
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applySampleBatch(s,
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), i.toLong,
-          "lang", "doc_id", k, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val state = StreamingJobs.drain(s, "graft_samp_state", Tables.documents(s, d),
+      "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applySampleBatch(s, b, id, "lang", "doc_id", k, dir)
     }
     prioritySample(state, "lang", "doc_id", k)
   }
@@ -2192,21 +2119,9 @@ object TextAnalysis {
     * is the batch's tokens plus a state-sized merge. */
   def streamedInvertedIndex(s: SparkSession, d: String, maxPost: Int,
       nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_idx_state").toString
-    // try/finally: a failing batch/drain must not leak the temp state dir
-    val state = try {
-      val docs = Tables.documents(s, d)
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyIndexBatch(s,
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), "text",
-          i.toLong, maxPost, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val state = StreamingJobs.drain(s, "graft_idx_state", Tables.documents(s, d),
+      "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyIndexBatch(s, b, "text", id, maxPost, dir)
     }
     renderIndex(state, maxPost)
   }
@@ -2287,29 +2202,12 @@ object TextAnalysis {
     * ≤budget rows + one count per domain, never corpus-sized. */
   def streamedMixtureSample(s: SparkSession, d: String, budget: Int,
       nBatches: Int): DataFrame = {
-    require(nBatches >= 1)
-    val sampleDir = java.nio.file.Files.createTempDirectory("graft_mix_sample").toString
-    val countDir = java.nio.file.Files.createTempDirectory("graft_mix_count").toString
-    // try/finally: a failing batch/drain must not leak the two temp
-    // state dirs
-    val (sample, counts) = try {
-      val docs = Tables.documents(s, d)
-      (0 until nBatches).foreach { i =>
-        val b = docs.filter(pmod(col("doc_id"), lit(nBatches)) === i)
-        graft.streaming.StreamingJobs.applySampleBatch(s, b, i.toLong,
-          "source", "doc_id", budget, sampleDir)
-        graft.streaming.StreamingJobs.applyGroupCountBatch(s, b, "source",
-          i.toLong, countDir)
-      }
-      (graft.streaming.StreamingJobs.latestAggState(s, sampleDir).get._2
-          .localCheckpoint(true),
-        graft.streaming.StreamingJobs.latestAggState(s, countDir).get._2
-          .localCheckpoint(true))
-    } finally {
-      Seq(sampleDir, countDir).foreach { dir =>
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
+    val docs = Tables.documents(s, d)
+    val sample = StreamingJobs.drain(s, "graft_mix_sample", docs, "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applySampleBatch(s, b, id, "source", "doc_id", budget, dir)
+    }
+    val counts = StreamingJobs.drain(s, "graft_mix_count", docs, "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyGroupCountBatch(s, b, "source", id, dir)
     }
     // ranking the ≤budget-per-group reservoir reproduces the global
     // ranks 1..budget exactly (bottom-k mergeability)
@@ -3261,21 +3159,9 @@ object TextAnalysis {
   def streamedTokenDistribution(s: SparkSession, d: String,
       nBatches: Int): DataFrame = {
     import s.implicits._
-    require(nBatches >= 1)
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_tok_state").toString
-    val counts = try {
-      val docs = Tables.documents(s, d)
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyTokenCountBatch(s,
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          i.toLong, d, 6, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestAggState(s, stateDir).get._2
-        .localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val counts = StreamingJobs.drain(s, "graft_tok_state", Tables.documents(s, d),
+      "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyTokenCountBatch(s, b, id, d, 6, dir)
     }
     val vocabDf = bpeModel(s, d, 6).vocab.toDF("token", "tid")
     counts.join(broadcast(vocabDf), Seq("tid"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.operators.{Dedup, QualityFilter, TextAnalysis}
+import graft.streaming.StreamingJobs
 
 /** The end-to-end LLM training-data curation pipeline — the engine's
   * operators COMPOSED into the product-shaped chain (every stage exists
@@ -260,26 +261,18 @@ object CurationPipeline {
     * (app/main.py:110-123); at 100 TB these stage dirs ARE the
     * materialized pipeline a production run resumes from. The
     * fingerprint in the path self-invalidates on data regeneration
-    * (the ModelStore discipline). Store off → a throwaway temp dir,
-    * exercised then cleaned up, as before. Either way the manifest is
-    * checkpointed, so the returned frame never depends on the workDir's
-    * lifetime. */
+    * (the ModelStore discipline). Store off → a throwaway staging dir
+    * (StreamingJobs.withStagingDir), deleted after the run. Either way
+    * the manifest is materialized (graft.Mat), so the returned frame
+    * never depends on the workDir's lifetime. */
   def runManifest(s: SparkSession, d: String, withClassifier: Boolean,
-      budget: Int): DataFrame =
+      budget: Int): DataFrame = {
+    def run(work: String) = graft.Mat(manifest(runStages(s, d, work, withClassifier, budget)))
     graft.operators.ModelStore.artifactPath(s, "curation_stages", d, "v1") match {
-      case Some(work) =>
-        manifest(runStages(s, d, work, withClassifier, budget))
-          .localCheckpoint(true)
-      case None =>
-        val work = java.nio.file.Files
-          .createTempDirectory("graft_curation_pipe").toString
-        try manifest(runStages(s, d, work, withClassifier, budget))
-          .localCheckpoint(true)
-        finally {
-          val p = new org.apache.hadoop.fs.Path(work)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        }
+      case Some(work) => run(work)
+      case None => StreamingJobs.withStagingDir(s, "graft_curation_pipe")(run)
     }
+  }
 
   /** Per-stage DuckDB replay of the whole chain (classifier off) — one
     * WITH RECURSIVE chain; each stage's SQL is the proven form of its
@@ -530,23 +523,12 @@ object CurationPipeline {
     * precondition — then the manifest derived from the drained state. */
   def streamedManifest(s: SparkSession, d: String, nBatches: Int,
       budget: Int): DataFrame = {
-    require(nBatches >= 1)
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_cur_stream").toString
-    try {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      (0 until nBatches).foreach { i =>
-        graft.streaming.StreamingJobs.applyCurationBatch(s,
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          i.toLong, stateDir)
-      }
-      graft.streaming.StreamingJobs.latestCurationManifest(s, stateDir, d, budget)
-        .get._2.localCheckpoint(true)
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(stateDir)
-      sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    val state = StreamingJobs.drain(s, "graft_cur_stream", docs, "doc_id", nBatches) {
+      (b, id, dir) => StreamingJobs.applyCurationBatch(s, b, id, dir)
     }
+    manifestFromState(s, d, state, budget)
   }
 
   /** q198: the composed pipeline's STREAMED twin (the eighth

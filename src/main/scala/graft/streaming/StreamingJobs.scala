@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface (north-star extension; the reference is
   * batch-only with file-existence stage caching, app/main.py:110-177).
@@ -77,10 +79,7 @@ object StreamingJobs {
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(dir).schema
-    val raw = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
+    val raw = fileStream(spark, dir, schema)
     schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -89,20 +88,93 @@ object StreamingJobs {
     }
   }
 
-  /** Run the windowed agg over the directory's backlog with a 1-hour
-    * watermark, availableNow trigger, memory sink; returns the finished
-    * query (results in table `sinkName`). */
-  def runWindowedAgg(spark: SparkSession, dir: String, sinkName: String): StreamingQuery = {
-    val q = windowedAgg(eventStream(spark, dir).withWatermark("ts", "1 hour"))
-      .writeStream
-      .queryName(sinkName)
-      .format("memory")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** The parquet files under `dir` as a stream, one file per trigger
+    * (on a cluster `dir` is the landing zone). */
+  private def fileStream(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+
+  /** Starts `writer` on the AvailableNow trigger and blocks until the
+    * backlog present at start is processed; returns the finished query. */
+  private def awaitAvailableNow(writer: DataStreamWriter[Row]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     q
   }
+
+  /** The one live runner behind every `runStreaming*` foreachBatch job:
+    * the backlog of parquet files under `streamDir` (read with `schema`)
+    * is handed to `f` one file per micro-batch with its batchId, and the
+    * call returns once the backlog is drained. foreachBatch is
+    * at-least-once: a restarted query may hand `f` a batch again under
+    * the same batchId. The state is exactly-once when `f` is an
+    * apply*Batch function, since each commits once per batchId and
+    * skips a batchId it already committed. An exception in `f` fails
+    * the query and is rethrown here by awaitTermination. */
+  private def foreachBatchAvailableNow(spark: SparkSession, streamDir: String,
+      schema: StructType)(f: (DataFrame, Long) => Unit): StreamingQuery =
+    awaitAvailableNow(fileStream(spark, streamDir, schema).writeStream.foreachBatch(f))
+
+  /** A fresh staging dir for one streamed-state run, rooted under
+    * spark.graft.stream.stageDir when set (a shared-FS path every
+    * executor can write — the cluster contract), else a driver-local
+    * temp dir (correct on local[*] only). The suffix is unique per run
+    * so concurrent runs never share state. */
+  private[graft] def stagingDir(s: SparkSession, prefix: String): String =
+    graft.GraftConf.streamStageDir(s) match {
+      case Some(root) =>
+        val p = s"$root/${prefix}_${java.util.UUID.randomUUID().toString.take(12)}"
+        val hp = new Path(p)
+        hp.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(hp)
+        p
+      case None =>
+        java.nio.file.Files.createTempDirectory(prefix).toString
+    }
+
+  /** Runs `body` on a fresh [[stagingDir]] and deletes the dir
+    * afterwards, whether `body` returns or throws — no staging dir
+    * outlives the call. Anything `body` returns that still reads the dir
+    * (a lazy DataFrame over its files) must be materialized inside
+    * `body`. */
+  def withStagingDir[T](s: SparkSession, prefix: String)(body: String => T): T = {
+    val dir = stagingDir(s, prefix)
+    try body(dir)
+    finally {
+      val p = new Path(dir)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  /** Drives a streamed twin to drain without a live stream: `input` is
+    * cut into `nBatches` slices by `pmod(key, nBatches)`, and slice i is
+    * folded as batchId i through `apply(slice, batchId, stateDir)` — an
+    * apply*Batch function on the versioned-state contract — into a
+    * state dir from [[withStagingDir]]. Returns the last committed state,
+    * materialized with [[graft.Mat]] before the dir is deleted.
+    * Exactly-once: each batchId commits once and a replayed batchId is a
+    * no-op, so the drained state is the fold of every slice once. Leak-
+    * free: the state dir is gone when this returns, and also when a
+    * batch or the materialization throws (the exception propagates). */
+  def drain(s: SparkSession, prefix: String, input: DataFrame, key: String,
+      nBatches: Int)(apply: (DataFrame, Long, String) => Boolean): DataFrame = {
+    require(nBatches >= 1, s"nBatches must be >= 1, got $nBatches")
+    withStagingDir(s, prefix) { dir =>
+      (0 until nBatches).foreach { i =>
+        apply(input.filter(pmod(col(key), lit(nBatches)) === i), i.toLong, dir)
+      }
+      graft.Mat(latestAggState(s, dir).get._2)
+    }
+  }
+
+  /** Run the windowed agg over the directory's backlog with a 1-hour
+    * watermark, availableNow trigger, memory sink; returns the finished
+    * query (results in table `sinkName`). */
+  def runWindowedAgg(spark: SparkSession, dir: String, sinkName: String): StreamingQuery =
+    awaitAvailableNow(windowedAgg(eventStream(spark, dir).withWatermark("ts", "1 hour"))
+      .writeStream
+      .queryName(sinkName)
+      .format("memory")
+      .outputMode("complete"))
 
   /** Streaming windowed approx-distinct: unique users per tumbling
     * event-time hour via approx_count_distinct — the production shape
@@ -116,8 +188,8 @@ object StreamingJobs {
     * error gate covers the estimator itself; StreamingSpec bounds the
     * streamed estimate against the batch exact count per window. */
   def runStreamingWindowedDistinct(spark: SparkSession, dir: String,
-      sinkName: String): StreamingQuery = {
-    val q = eventStream(spark, dir)
+      sinkName: String): StreamingQuery =
+    awaitAvailableNow(eventStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(approx_count_distinct(col("user_id"), rsd = 0.02).as("approx_users"))
@@ -125,12 +197,7 @@ object StreamingJobs {
       .writeStream
       .queryName(sinkName)
       .format("memory")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      .outputMode("complete"))
 
   /** Streaming near-dup detection: embeddings arriving as a stream are
     * hashed with the *already-fitted* LSH model and stream-static joined
@@ -161,10 +228,8 @@ object StreamingJobs {
       .withColumnRenamed("vec_id", "cid").withColumnRenamed("embedding", "cvec")
       .withColumn("salt", (col("cid") % salts).cast("int"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = hashed(stream)
+    val stream = fileStream(spark, streamDir, spark.read.parquet(streamDir).schema)
+    awaitAvailableNow(hashed(stream)
       .withColumn("salt", explode(array((0 until salts).map(lit): _*)))
       .join(corpus, Seq("ht", "bucket", "salt"))
       .filter(col("vec_id") =!= col("cid"))
@@ -175,11 +240,7 @@ object StreamingJobs {
       .writeStream
       .queryName(sinkName)
       .format("memory")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .outputMode("append"))
   }
 
   /** Continuous "index add" (M3 as a process): embeddings arriving as a
@@ -209,41 +270,25 @@ object StreamingJobs {
         batch.select(col("vec_id"), col("embedding")))
     }
 
-  /** The latest committed NSW graph state; None before any batch. */
-  def latestGraphState(spark: SparkSession, stateDir: String): Option[(Long, DataFrame)] = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedVersions(fs, dir).lastOption
-      .map { case (b, p) => (b, spark.read.parquet(p.toString)) }
-  }
-
   /** Streaming NSW graph index-add: vector files arriving as a stream
     * are inserted into the sharded graph index per micro-batch
-    * (exactly-once via [[applyGraphBatch]]'s versioned state). When
-    * stream vec_ids ascend past the corpus ids — the natural arrival
-    * order for crawl ids — the drained state is BIT-IDENTICAL to a
-    * one-shot rebuild over corpus+stream (StreamingSpec proves it). */
+    * (exactly-once via [[applyGraphBatch]]'s versioned state; read it
+    * with [[latestAggState]]). When stream vec_ids ascend past the
+    * corpus ids — the natural arrival order for crawl ids — the drained
+    * state is BIT-IDENTICAL to a one-shot rebuild over corpus+stream
+    * (StreamingSpec proves it). */
   def runStreamingGraphIndexAdd(spark: SparkSession, streamDir: String,
-      corpusDir: String, stateDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyGraphBatch(spark, batch, batchId, corpusDir, stateDir); ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      corpusDir: String, stateDir: String): StreamingQuery =
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+      (batch, batchId) => applyGraphBatch(spark, batch, batchId, corpusDir, stateDir)
+    }
 
   /** True iff `dir/batch_id=<batchId>` carries a _SUCCESS marker — the
     * committed-partition test the idempotent foreachBatch SINKS key on
     * (versioned-STATE jobs key on `state_b<id>` via committedVersions). */
   private def batchPartitionCommitted(spark: SparkSession, dir: String,
       batchId: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/batch_id=$batchId", "_SUCCESS")
+    val p = new Path(s"$dir/batch_id=$batchId", "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -288,17 +333,9 @@ object StreamingJobs {
   def runStreamingIndexAdd(spark: SparkSession, streamDir: String, corpusDir: String,
       outDir: String): StreamingQuery = {
     graft.operators.Ann.ivfIndexFull(spark, corpusDir) // fit/load once, up front
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIndexAddBatch(spark, batch, batchId, corpusDir, outDir); ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+      (batch, batchId) => applyIndexAddBatch(spark, batch, batchId, corpusDir, outDir)
+    }
   }
 
   /** Streaming incremental TEXT dedup (the q69 batch operator as a
@@ -349,16 +386,9 @@ object StreamingJobs {
       corpusParquet: String, outDir: String, threshold: Double): StreamingQuery = {
     val corpus = spark.read.parquet(corpusParquet)
       .select(col("doc_id"), col("source"), col("text"))
-    val stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyTextDedupBatch(spark, batch, batchId, corpus, outDir, threshold); ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    foreachBatchAvailableNow(spark, streamDir, corpus.schema) {
+      (batch, batchId) => applyTextDedupBatch(spark, batch, batchId, corpus, outDir, threshold)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -392,7 +422,7 @@ object StreamingJobs {
   private def withStateVersion(spark: SparkSession, stateDir: String,
       batchId: Long, coalesceOne: Boolean = true)
       (merge: Option[DataFrame] => DataFrame): Boolean = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
+    val dir = new Path(stateDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val versions = committedVersions(fs, dir)
     if (versions.lastOption.exists(_._1 >= batchId)) return false // replay: no-op
@@ -402,7 +432,7 @@ object StreamingJobs {
     TriggerTiming.record {
       val prev = versions.lastOption.map { case (_, p) => spark.read.parquet(p.toString) }
       val out = merge(prev)
-      val target = new org.apache.hadoop.fs.Path(dir, s"state_b$batchId")
+      val target = new Path(dir, s"state_b$batchId")
       (if (coalesceOne) out.coalesce(1) else out)
         .write.mode("overwrite").parquet(target.toString)
       fs.listStatus(dir).foreach { st =>
@@ -419,12 +449,12 @@ object StreamingJobs {
   /** Committed (_SUCCESS-marked) state versions under `stateDir` as
     * (batchId, path), ascending by batchId. */
   private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
+      stateDir: Path): Seq[(Long, Path)] =
     if (!fs.exists(stateDir)) Seq.empty
     else fs.listStatus(stateDir).toSeq.filter(_.isDirectory).flatMap { st =>
       st.getPath.getName match {
         case StateVersionRe(b)
-            if fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
+            if fs.exists(new Path(st.getPath, "_SUCCESS")) =>
           Some((b.toLong, st.getPath))
         case _ => None
       }
@@ -433,7 +463,7 @@ object StreamingJobs {
   /** The latest committed aggregate state as (batchId, state relation);
     * None before any batch has committed. */
   def latestAggState(spark: SparkSession, stateDir: String): Option[(Long, DataFrame)] = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
+    val dir = new Path(stateDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     committedVersions(fs, dir).lastOption
       .map { case (b, p) => (b, spark.read.parquet(p.toString)) }
@@ -528,20 +558,10 @@ object StreamingJobs {
     * selects candidates with zero false negatives (exactify against the
     * corpus as in q134 when the corpus is at rest). */
   def runStreamingHeavyHitters(spark: SparkSession, streamDir: String,
-      textCol: String, k: Int, stateDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMgBatch(spark, batch, textCol, batchId, k, stateDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      textCol: String, k: Int, stateDir: String): StreamingQuery =
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+      (batch, batchId) => applyMgBatch(spark, batch, textCol, batchId, k, stateDir)
+    }
 
   /** Streaming incremental aggregate maintenance — the q107 state-merge
     * loop as a standing job: each micro-batch is aggregated alone
@@ -557,20 +577,10 @@ object StreamingJobs {
     * idempotency — the same associativity q107's oracle proves
     * cross-engine). */
   def runStreamingIncrementalAgg(spark: SparkSession, streamDir: String,
-      key: String, valueCol: String, stateDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyAggBatch(spark, batch, batchId, key, valueCol, stateDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      key: String, valueCol: String, stateDir: String): StreamingQuery =
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+      (batch, batchId) => applyAggBatch(spark, batch, batchId, key, valueCol, stateDir)
+    }
 
   /** Merge one micro-batch of documents into a persistent Count-Min
     * cell relation, exactly once per batchId (the [[applyAggBatch]]
@@ -734,19 +744,10 @@ object StreamingJobs {
     * stream keep the q151 frequency sketch current, one [[applyCmsBatch]]
     * merge per micro-batch; read it any time with [[latestAggState]]. */
   def runStreamingCms(spark: SparkSession, streamDir: String, textCol: String,
-      depth: Int, width: Int, stateDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCmsBatch(spark, batch, textCol, batchId, depth, width, stateDir); ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      depth: Int, width: Int, stateDir: String): StreamingQuery =
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+      (batch, batchId) => applyCmsBatch(spark, batch, textCol, batchId, depth, width, stateDir)
+    }
 
   /** Merge one micro-batch into a persistent k-per-group priority
     * sample, exactly once per batchId ([[applyAggBatch]] contract).
@@ -838,19 +839,10 @@ object StreamingJobs {
     * drained state == one-shot batch CC over every edge (StreamingSpec
     * proves it, plus replay idempotency). */
   def runStreamingCc(spark: SparkSession, streamDir: String,
-      stateDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCcBatch(spark, batch, batchId, stateDir); ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      stateDir: String): StreamingQuery =
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+      (batch, batchId) => applyCcBatch(spark, batch, batchId, stateDir)
+    }
 
   /** Streaming JOIN-VIEW maintenance — q138's delta algebra as a
     * standing job for the static-dimension case: fact deltas (lineitem
@@ -870,21 +862,13 @@ object StreamingJobs {
       dimParquet: String, stateDir: String): StreamingQuery = {
     val dim = spark.read.parquet(dimParquet)
       .select(col("o_orderkey"), col("o_orderpriority"))
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+      (batch, batchId) =>
         val enriched = batch.select(col("l_orderkey"), col("l_quantity"))
           .join(broadcast(dim), col("l_orderkey") === col("o_orderkey"))
         applyAggBatch(spark, enriched, batchId,
           "o_orderpriority", "l_quantity", stateDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   /** STREAM-STREAM interval join: purchases attributed to every view by
@@ -898,33 +882,8 @@ object StreamingJobs {
     * history. Batch twin is q96 (equivalence asserted by StreamingSpec).
     * Inner join + append mode: rows emit as soon as both sides arrive. */
   def runStreamingIntervalJoin(spark: SparkSession, dir: String,
-      sinkName: String): StreamingQuery = {
-    val views = eventStream(spark, dir)
-      .filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val buys = eventStream(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    val q = views.join(buys,
-        col("user_id") === col("p_user") &&
-        col("purchase_ts") > col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr("INTERVAL 24 HOURS"))
-      .select(col("user_id"), col("view_id"), col("purchase_id"),
-        (unix_timestamp(col("purchase_ts")) - unix_timestamp(col("view_ts")))
-          .as("gap_s"))
-      .writeStream
-      .queryName(sinkName)
-      .format("memory")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      sinkName: String): StreamingQuery =
+    intervalJoin(spark, dir, sinkName, "inner")
 
   /** STREAM-STREAM interval join, LEFT OUTER form: every view emits —
     * joined with each purchase inside its 24 h attribution window as the
@@ -939,34 +898,8 @@ object StreamingJobs {
     * file for exactly that, then asserts equivalence against the batch
     * left join (q123 twin). Inner form: runStreamingIntervalJoin. */
   def runStreamingIntervalJoinLeftOuter(spark: SparkSession, dir: String,
-      sinkName: String): StreamingQuery = {
-    val views = eventStream(spark, dir)
-      .filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val buys = eventStream(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    val q = views.join(buys,
-        col("user_id") === col("p_user") &&
-        col("purchase_ts") > col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr("INTERVAL 24 HOURS"),
-        "leftOuter")
-      .select(col("user_id"), col("view_id"), col("purchase_id"),
-        (unix_timestamp(col("purchase_ts")) - unix_timestamp(col("view_ts")))
-          .as("gap_s"))
-      .writeStream
-      .queryName(sinkName)
-      .format("memory")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      sinkName: String): StreamingQuery =
+    intervalJoin(spark, dir, sinkName, "leftOuter")
 
   /** Streaming FULL OUTER interval join — completes the join-mode
     * matrix next to the inner (runStreamingIntervalJoin) and left-outer
@@ -979,7 +912,14 @@ object StreamingJobs {
     * Batch twin q125; StreamingSpec asserts equivalence after the
     * sentinel watermark close. */
   def runStreamingIntervalJoinFullOuter(spark: SparkSession, dir: String,
-      sinkName: String): StreamingQuery = {
+      sinkName: String): StreamingQuery =
+    intervalJoin(spark, dir, sinkName, "fullOuter")
+
+  /** The three interval-join runners above, by `joinType`: views and
+    * purchases read as two watermarked streams of the events in `dir`,
+    * joined on user and purchase_ts ∈ (view_ts, view_ts + 24 h]. */
+  private def intervalJoin(spark: SparkSession, dir: String, sinkName: String,
+      joinType: String): StreamingQuery = {
     val views = eventStream(spark, dir)
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
@@ -990,23 +930,22 @@ object StreamingJobs {
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("ts").as("purchase_ts"))
       .withWatermark("purchase_ts", "1 hour")
-    val q = views.join(buys,
+    // only a full outer join emits purchases with no view (user_id null)
+    val user =
+      if (joinType == "fullOuter") coalesce(col("user_id"), col("p_user")).as("user_id")
+      else col("user_id")
+    awaitAvailableNow(views.join(buys,
         col("user_id") === col("p_user") &&
         col("purchase_ts") > col("view_ts") &&
         col("purchase_ts") <= col("view_ts") + expr("INTERVAL 24 HOURS"),
-        "fullOuter")
-      .select(coalesce(col("user_id"), col("p_user")).as("user_id"),
-        col("view_id"), col("purchase_id"),
+        joinType)
+      .select(user, col("view_id"), col("purchase_id"),
         (unix_timestamp(col("purchase_ts")) - unix_timestamp(col("view_ts")))
           .as("gap_s"))
       .writeStream
       .queryName(sinkName)
       .format("memory")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .outputMode("append"))
   }
 
   /** Merge one micro-batch of documents into the additive (tid, cnt)
@@ -1136,35 +1075,21 @@ object StreamingJobs {
     * [[applyCurationBatch]] merge per micro-batch; read the manifest
     * any time with [[latestCurationManifest]]. */
   def runStreamingCuration(spark: SparkSession, streamDir: String,
-      stateDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCurationBatch(spark, batch, batchId, stateDir); ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      stateDir: String): StreamingQuery =
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+      (batch, batchId) => applyCurationBatch(spark, batch, batchId, stateDir)
+    }
 
   /** Streaming exact dedup: first event per (user_id, event_type), state
     * bounded by a 1-day watermark — dropDuplicates-with-watermark, the
     * streaming form of the batch keep-first window (q72). */
-  def runStreamingDedup(spark: SparkSession, dir: String, sinkName: String): StreamingQuery = {
-    val q = eventStream(spark, dir)
+  def runStreamingDedup(spark: SparkSession, dir: String, sinkName: String): StreamingQuery =
+    awaitAvailableNow(eventStream(spark, dir)
       .withWatermark("ts", "1 day")
       .dropDuplicates("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
       .writeStream
       .queryName(sinkName)
       .format("memory")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      .outputMode("append"))
 }

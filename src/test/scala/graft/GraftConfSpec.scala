@@ -400,13 +400,13 @@ class GraftConfSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_stage_root").toString
     try {
       spark.conf.set("spark.graft.stream.stageDir", root)
-      val p = operators.Ann.stagingDir(spark, "probe")
+      val p = streaming.StreamingJobs.stagingDir(spark, "probe")
       assert(p.startsWith(root), s"staging dir $p not under the configured root $root")
       assert(new java.io.File(p).isDirectory, "configured staging dir was not created")
-      val p2 = operators.Ann.stagingDir(spark, "probe")
+      val p2 = streaming.StreamingJobs.stagingDir(spark, "probe")
       assert(p2 != p, "staging dirs must be unique per run")
     } finally spark.conf.unset("spark.graft.stream.stageDir")
-    val q = operators.Ann.stagingDir(spark, "probe")
+    val q = streaming.StreamingJobs.stagingDir(spark, "probe")
     assert(!q.startsWith(root), "unset conf must fall back to a temp dir")
   }
 }

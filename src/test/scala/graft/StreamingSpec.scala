@@ -196,7 +196,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toList,
         r.getSeq[Long](3).toList))
       .sortBy(x => (x._1, x._2)).toList
-    val Some((lastBatch, state)) = StreamingJobs.latestGraphState(spark, stateDir)
+    val Some((lastBatch, state)) = StreamingJobs.latestAggState(spark, stateDir)
     val rebuilt = operators.Nsw.graphsForFrame(
       all.select(col("vec_id"), col("embedding")))
     assert(canon(state) == canon(rebuilt),
@@ -205,7 +205,7 @@ class StreamingSpec extends SparkSpec {
     val replayed = StreamingJobs.applyGraphBatch(spark,
       all.filter(col("vec_id") > cut2), lastBatch, corpusDir, stateDir)
     assert(!replayed, "replayed batchId was applied instead of skipped")
-    assert(canon(StreamingJobs.latestGraphState(spark, stateDir).get._2) == canon(rebuilt),
+    assert(canon(StreamingJobs.latestAggState(spark, stateDir).get._2) == canon(rebuilt),
       "state changed under a replayed batch")
   }
 
