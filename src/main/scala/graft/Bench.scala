@@ -45,11 +45,10 @@ object Bench {
     streaming.StreamingJobs.TriggerTiming.reset()
     FitTiming.reset()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // label the streamed jobs' per-trigger work with this query's name
-      // (VERDICT r13 #6) — accumulated across the repeats; same for the
-      // batch fit-once caches (VERDICT r14 #2)
-      streaming.StreamingJobs.TriggerTiming.label = name
-      FitTiming.label = name
+      // label the streamed jobs' per-trigger work (VERDICT r13 #6) and
+      // the batch fit-once caches (VERDICT r14 #2) with this query's
+      // name — accumulated across the repeats
+      BenchLabel.current = name
       def once(): (Double, Option[String]) = {
         val t0 = System.nanoTime()
         // a failing query must surface as an error, not bench as "fast":

@@ -17,23 +17,15 @@ package graft
   * classifies from the artifacts alone (tools/bench_diff.py's cold-fit
   * rule): identical (hits, fits) with flat fit_sec ⇒ the swing is host
   * load on identical work; a fits delta ⇒ one run paid a cold fit the
-  * other did not.
-  *
-  * Label contract (same as TriggerTiming, ADVICE r14): only the
-  * sequential measuring caller (Bench) may set `label`; the jobs are
-  * driver-side and awaited synchronously per query, so one volatile
-  * label is race-free for that use. Concurrent non-bench callers all
-  * land under "untagged" — attribution there would be meaningless
-  * anyway, and the engine's results never depend on this bookkeeping. */
+  * other did not. Lookups are keyed by [[BenchLabel]] (its label
+  * contract applies). */
 object FitTiming {
-  @volatile var label: String = "untagged"
-
   // label -> (hits, fits, fitNanos)
   private val acc = scala.collection.concurrent.TrieMap
     .empty[String, (Long, Long, Long)]
 
   private def add(hits: Long, fits: Long, nanos: Long): Unit = {
-    val l = label
+    val l = BenchLabel.current
     val (h, f, n) = acc.getOrElse(l, (0L, 0L, 0L))
     acc.update(l, (h + hits, f + fits, n + nanos))
   }

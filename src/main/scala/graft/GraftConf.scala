@@ -157,7 +157,7 @@ object GraftConf {
   /** Cluster profile for [[graft.Mat]]: true = within-query
     * materializations are RELIABLE checkpoints under [[checkpointDir]]
     * (survive executor loss, pin no executor storage); false (default,
-    * the local[n] profile) = eager localCheckpoint. */
+    * the local[n] profile) = an eager checkpoint into executor storage. */
   def reliableCheckpoints(s: SparkSession): Boolean =
     s.conf.get("spark.graft.checkpoint.reliable", "false").toBoolean
 

@@ -6,6 +6,11 @@ import org.apache.spark.sql.DataFrame
   * are consumed more than once (iterative round states, multi-consumer
   * substrates, bounded statistics feeding several broadcast subtrees).
   *
+  * This is the engine's ONLY checkpoint call: no other main-code
+  * module checkpoints a DataFrame itself (MatSpec's source tripwire
+  * holds that), so the mode below is decided here, once, for every
+  * CC round, graph round state, BPE vocab state and stage chain.
+  *
   * Two modes, selected by conf (optimization r17, VERDICT r16 #3/#7 —
   * "localCheckpoint is the wrong primitive at scale"):
   *

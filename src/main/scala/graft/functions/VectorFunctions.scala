@@ -42,9 +42,6 @@ object VectorFunctions {
       lit(0.0),
       (acc, x) => acc + x)
 
-  /** L2 distance. */
-  def l2Dist(a: Column, b: Column): Column = sqrt(l2DistSq(a, b))
-
   /** Faiss-style L2-distance -> cosine conversion for unit vectors:
     * cos = 1 - d^2/2, clipped to [-1, 1]
     * (reference: app/evaluation.py:24-27; used app/main.py:250). */

@@ -31,10 +31,6 @@ object Dedup {
     * [[graft.functions.ShingleArray]] for why this must not be a HOF). */
   private def shingles(t: Column, n: Int): Column = shingleArray(t, n)
 
-  /** 32-bit hash of a string: first 8 hex chars of md5, as a long. */
-  private def h32(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 8), 16, 10).cast("long")
-
   // ---------------------------------------------------------------------
   // q50: exact keyed dedup, keep-first (D1/D3)
   // ---------------------------------------------------------------------
@@ -545,8 +541,8 @@ object Dedup {
     * Each round is two shuffle pairs (groupBy min + re-point join);
     * convergence = both steps leave the edge set unchanged (checked via
     * an order-insensitive fingerprint, sound here because labels only
-    * ever decrease). localCheckpoint truncates lineage per round (at
-    * production scale use a reliable checkpoint dir). Below
+    * ever decrease). [[graft.Mat]] truncates lineage per round (a
+    * reliable checkpoint under `spark.graft.checkpoint.reliable`). Below
     * `spark.graft.cc.localEdgeCutoff` edges the operator instead
     * collects the (already materialized) edge list and union-finds on
     * the driver — the same "tiny side doesn't deserve distribution"
@@ -591,12 +587,11 @@ object Dedup {
     // materialize the input ONCE: pairs is typically an expensive plan
     // (the whole sketch-dedup candidate pipeline for q64) and both the
     // vertex set and the edge set derive from it
-    val base = pairs.select(col("id1"), col("id2")).localCheckpoint(true)
+    val base = graft.Mat(pairs.select(col("id1"), col("id2")))
     val verts = base.select(col("id1").as("v"))
       .union(base.select(col("id2").as("v"))).distinct()
-    var edges = base.select(col("id1").as("src"), col("id2").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+    var edges = graft.Mat(base.select(col("id1").as("src"), col("id2").as("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
     var fp = edgeFingerprint(edges)
     var rounds = 0
     var converged = fp._1 == 0L
@@ -617,7 +612,7 @@ object Dedup {
       // edge set across the FULL round is the candidate fixed point —
       // Kiveris et al.'s potential argument rules out cycles, and the
       // half-step is re-validated once below rather than every round
-      val afterSmall = smallStar(largeStar(edges)).localCheckpoint(true)
+      val afterSmall = graft.Mat(smallStar(largeStar(edges)))
       rounds += 1
       require(rounds <= 64,
         "connectedComponents failed to converge in 64 rounds") // O(log n) alg; 64 ≈ 2^64 vertices
@@ -1399,14 +1394,13 @@ object Dedup {
     // of the candidate join and the verification arrays) — unpinned, the
     // tokenize→df-join→sort pipeline re-runs per consumer (measured 4×
     // recompute in the 10× rehearsal before this checkpoint)
-    val docs = ex.join(dfk, Seq("k"))
+    val docs = graft.Mat(ex.join(dfk, Seq("k"))
       .groupBy(col("doc_id"))
       .agg(first(col("n_sh")).as("n_sh"),
         sort_array(collect_list(struct(col("df"), col("k")))).as("ord"))
       .select(col("doc_id"), col("n_sh"),
         expr("transform(ord, x -> x.k)").as("keys"),
-        expr(s"n_sh - (n_sh * $tauNum + ${tauDen - 1}) DIV $tauDen + 1").as("plen"))
-      .localCheckpoint(true)
+        expr(s"n_sh - (n_sh * $tauNum + ${tauDen - 1}) DIV $tauDen + 1").as("plen")))
     // 1-based position of each prefix key feeds the positional filter
     val pref = docs.select(col("doc_id"), col("n_sh"),
       posexplode(slice(col("keys"), lit(1), col("plen"))))

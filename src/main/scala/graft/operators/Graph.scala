@@ -136,7 +136,7 @@ object Graph {
         .select(col("src"), explode(col("top")).as("e"))
         .select(col("src"), col("e._2").as("dst"), col("e._1").as("sim"))
     }
-    var edges = topkOf(score(ivfSeedEdges(s, d, kb)), kb).localCheckpoint(true)
+    var edges = graft.Mat(topkOf(score(ivfSeedEdges(s, d, kb)), kb))
     for (_ <- 1 to rounds) {
       val fwd = edges.select(col("src"), col("dst"))
       val und = fwd.union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -149,7 +149,7 @@ object Graph {
         .select(col("src"), col("dst2").as("dst"))
         .union(fwd)
         .dropDuplicates("src", "dst")
-      edges = topkOf(score(cand), kb).localCheckpoint(true)
+      edges = graft.Mat(topkOf(score(cand), kb))
     }
     topkOf(edges, k)
   }
@@ -248,7 +248,7 @@ object Graph {
     * spec-gated in GraphSpec. Each iteration is one equi-join + one
     * hash aggregate + one left join — the canonical iterative-relational
     * plan (same family as the CC alternation, Dedup.scala); the edge
-    * relation is localCheckpoint'd once so five iterations scan a
+    * relation goes through [[graft.Mat]] once so five iterations scan a
     * materialized N·k-row table instead of replaying the O(N²) scorer,
     * and lineage stays flat (at cluster scale: checkpoint every ~5
     * rounds to cut DAG growth, exactly as q64's CC does per round). */
@@ -256,7 +256,7 @@ object Graph {
       damping: Double): DataFrame = {
     val s = nodes.sparkSession
     val n = nodes.count()
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val e = graft.Mat(edges.select(col("src"), col("dst")))
     var ranks = nodes.select(col("vec_id"), lit(1.0 / n).as("r"))
     for (_ <- 1 to iters) {
       val contrib = e.join(ranks, col("src") === col("vec_id"))
@@ -305,20 +305,19 @@ object Graph {
     // them, and an uncheckpointed lineage (an NN-Descent build) would
     // otherwise be evaluated once for the degree scan and again for the
     // padded union
-    val base = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val base = graft.Mat(edges.select(col("src"), col("dst")))
     val deg = base.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val pad = nodes.select(col("vec_id"))
+    val pad = graft.Mat(nodes.select(col("vec_id"))
       .join(deg, col("vec_id") === col("src"), "left")
       .select(col("vec_id"),
         (lit(k.toLong) - coalesce(col("outdeg"), lit(0L))).as("miss"))
       .filter(col("miss") > 0)
       .select(col("vec_id").as("src"), col("vec_id").as("dst"),
         explode(expr("sequence(1, miss)")).as("i"))
-      .select(col("src"), col("dst"))
-      .localCheckpoint(true) // tiny: deficient nodes only
+      .select(col("src"), col("dst"))) // tiny: deficient nodes only
     // common case (every builder emits exact top-k): pad is empty — use
     // the already-checkpointed base and skip a second materialization
-    val e = if (pad.isEmpty) base else base.unionByName(pad).localCheckpoint(true)
+    val e = if (pad.isEmpty) base else graft.Mat(base.unionByName(pad))
     var ranks = nodes.select(col("vec_id"), lit(1L).as("r"))
     var pow = 1L // (20k)^i at entry of iteration i+1
     for (_ <- 1 to iters) {
@@ -398,11 +397,11 @@ object Graph {
     * cross-engine tie ambiguity, a hash-exact oracle. State is sparse
     * (node, label, cnt) long-form — at C classes it grows at most
     * N·C, and each round is one equi-join + one hash aggregate + an
-    * anti-join clamp, localCheckpoint'd like the CC alternation. */
+    * anti-join clamp, materialized per round like the CC alternation. */
   def labelPropagate(nodes: DataFrame, edges: DataFrame, k: Int,
       iters: Int, seedMod: Int): DataFrame = {
     val seeds = nodes.filter(col("vec_id") % seedMod === 0)
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val e = graft.Mat(edges.select(col("src"), col("dst")))
     var state = seeds.select(col("vec_id"), col("label"), lit(1L).as("cnt"))
     var pow = 1L
     for (_ <- 1 to iters) {
@@ -410,10 +409,9 @@ object Graph {
       val votes = e.join(state.withColumnRenamed("vec_id", "dst"), Seq("dst"))
         .groupBy(col("src"), col("label")).agg(sum(col("cnt")).as("cnt"))
         .withColumnRenamed("src", "vec_id")
-      state = votes
+      state = graft.Mat(votes
         .join(seeds.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .union(seeds.select(col("vec_id"), col("label"), lit(pow).as("cnt")))
-        .localCheckpoint(true)
+        .union(seeds.select(col("vec_id"), col("label"), lit(pow).as("cnt"))))
     }
     state
   }
@@ -508,17 +506,16 @@ object Graph {
     * test corpus (the peel reaching its fixed point) is spec-gated in
     * GraphSpec. Each round is one hash aggregate + two semi-joins on
     * the edge relation — shuffle bounded by the live edge count, never
-    * N²; localCheckpoint per round keeps lineage flat (the q64 CC
+    * N²; one [[graft.Mat]] per round keeps lineage flat (the q64 CC
     * discipline). */
   def kCorePeel(edges: DataFrame, c: Int, rounds: Int): DataFrame = {
     require(c >= 1 && rounds >= 1)
-    var e = edges.localCheckpoint(true)
+    var e = graft.Mat(edges)
     for (_ <- 1 to rounds) {
       val alive = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= c).select(col("src"))
-      e = e.join(alive, Seq("src"), "left_semi")
-        .join(alive.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .localCheckpoint(true)
+      e = graft.Mat(e.join(alive, Seq("src"), "left_semi")
+        .join(alive.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi"))
     }
     e.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("vec_id"), col("core_deg"))

@@ -212,7 +212,7 @@ object LanguageModel {
     // 10.8 s vs 1.9 s warm at sf0.1 (r16, after the model/tf caches
     // landed; the pre-r16 inline chain paid the same 7× on a cheaper
     // per-evaluation cost, 4.2 s)
-    val doc = docSurprisal(s, d).localCheckpoint(true)
+    val doc = graft.Mat(docSurprisal(s, d))
     val r = doc.select(lit("all").as("g"), col("mean_millibits").as("v"))
     val cuts = graft.plans.Scale.groupExactRank(s, r, "g", Seq(1.0 / 3, 2.0 / 3))
       .agg(min(when(col("p") < 0.5, col("value"))).as("cut1"),

@@ -2282,7 +2282,7 @@ object TextAnalysis {
     * from the same step template. */
   /** Character-split vocabulary relation (word, cnt, sym) of a document
     * frame — BPE's training state. */
-  private def bpeVocab(docs: DataFrame): DataFrame = docs
+  private def bpeVocab(docs: DataFrame): DataFrame = graft.Mat(docs
     .select(explode(toks(col("text"))).as("word"))
     // an empty token (whitespace-only doc) would hit Spark's
     // DESCENDING sequence(1, 0) and diverge from DuckDB's empty
@@ -2301,8 +2301,7 @@ object TextAnalysis {
     // stages instead of 32-task ones, and round latency (the only
     // per-merge cost) drops ~3×. The corpus-wide word-count scan above
     // this line stays fully distributed.
-    .repartition(2)
-    .localCheckpoint(true)
+    .repartition(2))
 
   /** Pair counts of the current vocab state, ordered (freq DESC, a, b)
     * — the ordering BOTH the driver selection and the oracle share. */
@@ -2334,9 +2333,8 @@ object TextAnalysis {
       require(top.nonEmpty, s"BPE step $step: no pairs left (k too large for corpus)")
       val (a, b, f) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
       merges += ((step, a, b, f))
-      vocab = vocab.withColumn("sym",
-        replace(col("sym"), lit(s" $a  $b "), lit(s" $a$b ")))
-        .localCheckpoint(true)
+      vocab = graft.Mat(vocab.withColumn("sym",
+        replace(col("sym"), lit(s" $a  $b "), lit(s" $a$b "))))
     }
     (merges.result(), vocab)
   }
@@ -2434,7 +2432,7 @@ object TextAnalysis {
         replace(c, lit(s" $a  $b "), lit(s" $a$b "))
       }
       vocab = vocab.withColumn("sym", sym)
-      if (rounds % 8 == 0) vocab = vocab.localCheckpoint(true)
+      if (rounds % 8 == 0) vocab = graft.Mat(vocab)
       accepted.foreach { case (a, b, f) =>
         step += 1; merges += ((step, a, b, f))
       }
@@ -3559,12 +3557,11 @@ object TextAnalysis {
     // corpus-scale docTokens join + groupBy once per subtree (measured:
     // q216 spread [1.07, 5.34, 16.4] s at sf0.1; the relation itself is
     // tens of rows)
-    val perSrc = docTokens(s, d, k)
+    val perSrc = graft.Mat(docTokens(s, d, k)
       .groupBy(col("source"))
       .agg(sum(col("n_tok")).as("tok_total"))
       .withColumn("w", floor(sqrt(col("tok_total"))).cast("long"))
-      .withColumn("cap_tok", lit(maxEpochs.toLong) * col("tok_total"))
-      .localCheckpoint(true)
+      .withColumn("cap_tok", lit(maxEpochs.toLong) * col("tok_total")))
     val wsum = perSrc.agg(sum(col("w")).as("wsum"))
     // ascending water-pinning order; catalog-sized relation, so the
     // unpartitioned window is deliberate and bounded
@@ -3687,12 +3684,11 @@ object TextAnalysis {
     // both the shard-offset aggregate (a broadcast subtree) and the
     // local-cumsum window re-scan it, and each re-scan replayed the
     // docTokens join
-    val keyed = docTokens(s, d, k)
+    val keyed = graft.Mat(docTokens(s, d, k)
       .withColumn("ord", conv(substring(md5(
           concat(lit(s"$seed:"), col("doc_id").cast("string")).cast("binary")),
         1, 15), 16, 10).cast("long"))
-      .withColumn("shard", col("ord") % shards)
-      .localCheckpoint(true)
+      .withColumn("shard", col("ord") % shards))
     val wloc = Window.partitionBy(col("source"), col("shard"))
       .orderBy(col("ord"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3704,12 +3700,11 @@ object TextAnalysis {
       .select(col("source"), col("shard"), col("off"))
     // materialized: the full-epoch explode and the partial-epoch filter
     // below are two branches over this same relation (r16, guide §2.4)
-    val cum = keyed
+    val cum = graft.Mat(keyed
       .withColumn("cum_loc", sum(col("n_tok")).over(wloc))
       .join(broadcast(offs), Seq("source", "shard"))
       .withColumn("cum", col("off") + col("cum_loc"))
-      .join(broadcast(alloc), Seq("source"))
-      .localCheckpoint(true)
+      .join(broadcast(alloc), Seq("source")))
     val fullRows = cum.filter(col("full_ep") > 0)
       .select(col("doc_id"), col("source"),
         explode(expr("sequence(0, full_ep - 1)")).as("epoch"), col("n_tok"))
@@ -3811,15 +3806,14 @@ object TextAnalysis {
     * per-doc sum; no global aggregate anywhere, so the operator scales
     * with partitions. */
   def repetitionProfile(df: DataFrame, top2Max: Double, dup5Max: Double): DataFrame = {
-    val base = df
+    val base = graft.Mat(df
       .select(col("doc_id"), toks(col("text")).as("tk"))
       .withColumn("n_chars", length(concat_ws(" ", col("tk"))))
       // an empty/whitespace-only doc has n_chars = 0: Spark's IEEE /0
       // yields NaN while DuckDB differs — exclude the degenerate docs in
       // BOTH engines so the division is well-defined by construction
       // (the q106/q186 empty-doc convention)
-      .filter(col("n_chars") > 0)
-      .localCheckpoint(true) // three consumers: base, 2-gram, 5-gram legs
+      .filter(col("n_chars") > 0)) // three consumers: base, 2-gram, 5-gram legs
     def grams(n: Int): DataFrame =
       base.filter(size(col("tk")) >= n).select(col("doc_id"),
         explode(expr(

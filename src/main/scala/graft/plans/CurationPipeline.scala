@@ -142,18 +142,16 @@ object CurationPipeline {
   }
 
   /** The deterministic post-gate chain over an s1-shaped frame, in
-    * manifest order. `checkpoint` eagerly truncates lineage between
-    * stages (the batch runner materializes through the stage cache
-    * instead). */
+    * manifest order, with each stage materialized ([[graft.Mat]]) so
+    * lineage stays flat between stages. */
   private[graft] def suffixStages(s: SparkSession, d: String,
-      s1c: DataFrame, budget: Int, checkpoint: Boolean): Seq[(String, DataFrame)] = {
-    def cp(df: DataFrame) = if (checkpoint) df.localCheckpoint(true) else df
-    val s2 = cp(sketchDedupStage(s1c))
-    val s3 = cp(exciseStage(s2))
-    val s4 = cp(decontaminateStage(s3))
-    val s5 = cp(splitStage(s4))
-    val s6 = cp(mixtureStage(s5, budget))
-    val s7 = cp(packStage(s, d, s6))
+      s1c: DataFrame, budget: Int): Seq[(String, DataFrame)] = {
+    val s2 = graft.Mat(sketchDedupStage(s1c))
+    val s3 = graft.Mat(exciseStage(s2))
+    val s4 = graft.Mat(decontaminateStage(s3))
+    val s5 = graft.Mat(splitStage(s4))
+    val s6 = graft.Mat(mixtureStage(s5, budget))
+    val s7 = graft.Mat(packStage(s, d, s6))
     Seq("sketch_dedup" -> s2, "excise" -> s3, "decontaminate" -> s4,
       "split" -> s5, "mixture" -> s6, "pack" -> s7)
   }
@@ -224,11 +222,9 @@ object CurationPipeline {
         coalesce(expr("bit_xor(rk)"), lit(0L)).as("fp"))
       .select(lit(0).as("ord"), lit("input").as("stage"),
         col("n_rows"), col("n_tokens"), col("fp"))
-    val s1 = state.filter(col("rel") === "s1")
-      .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      .localCheckpoint(true)
-    val rest = manifestRows(
-      Seq("gate" -> s1) ++ suffixStages(s, d, s1, budget, checkpoint = true), 1)
+    val s1 = graft.Mat(state.filter(col("rel") === "s1")
+      .select(col("doc_id"), col("text"), col("lang"), col("source")))
+    val rest = manifestRows(Seq("gate" -> s1) ++ suffixStages(s, d, s1, budget), 1)
     inRow.unionByName(rest).orderBy(col("ord"))
   }
 

@@ -34,26 +34,16 @@ object StreamingJobs {
     * (batches, busy-nanos) per label lets Bench emit
     * `stream: {q: {work, batches}}` into its artifact; wall − work is
     * the wait share, and tools/bench_diff.py's stream-wait rule
-    * classifies a cross-round swing from the artifacts alone.
-    *
-    * Label contract (ADVICE r14): ONLY the sequential measuring caller
-    * (Bench) may set `label` — it runs queries one at a time and awaits
-    * each stream synchronously, so one volatile label is race-free
-    * there. Any other caller must leave the label alone: concurrent
-    * foreachBatch work (two streams in one JVM, non-bench harnesses)
-    * all accumulates under whatever label is current — "untagged" by
-    * default — and per-query attribution of concurrent work would be
-    * meaningless anyway. Engine results never depend on this
-    * bookkeeping; it feeds only the bench artifact. */
+    * classifies a cross-round swing from the artifacts alone. Work is
+    * keyed by [[graft.BenchLabel]] (its label contract applies). */
   object TriggerTiming {
-    @volatile var label: String = "untagged"
     private val acc = scala.collection.concurrent.TrieMap
       .empty[String, (Long, Long)] // label -> (batches, busyNanos)
     def record[T](body: => T): T = {
       val t0 = System.nanoTime()
       try body
       finally {
-        val l = label
+        val l = graft.BenchLabel.current
         val (b, n) = acc.getOrElse(l, (0L, 0L))
         acc.update(l, (b + 1, n + (System.nanoTime() - t0)))
       }
@@ -110,10 +100,19 @@ object StreamingJobs {
     * the same batchId. The state is exactly-once when `f` is an
     * apply*Batch function, since each commits once per batchId and
     * skips a batchId it already committed. An exception in `f` fails
-    * the query and is rethrown here by awaitTermination. */
+    * the query and is rethrown here by awaitTermination.
+    *
+    * The stream's checkpoint lives at `dir/_checkpoint`, next to the
+    * state or sink `f` commits into, so a re-run over the same `dir`
+    * resumes the file log and batch numbering: a file processed before
+    * is never handed to `f` again, and a new file gets a fresh batchId
+    * whatever its mtime. The `_` prefix keeps the checkpoint out of the
+    * state-version listing and of parquet readers of `dir`. */
   private def foreachBatchAvailableNow(spark: SparkSession, streamDir: String,
-      schema: StructType)(f: (DataFrame, Long) => Unit): StreamingQuery =
-    awaitAvailableNow(fileStream(spark, streamDir, schema).writeStream.foreachBatch(f))
+      schema: StructType, dir: String)(f: (DataFrame, Long) => Unit): StreamingQuery =
+    awaitAvailableNow(fileStream(spark, streamDir, schema).writeStream
+      .option("checkpointLocation", s"$dir/_checkpoint")
+      .foreachBatch(f))
 
   /** A fresh staging dir for one streamed-state run, rooted under
     * spark.graft.stream.stageDir when set (a shared-FS path every
@@ -279,7 +278,7 @@ object StreamingJobs {
     * (StreamingSpec proves it). */
   def runStreamingGraphIndexAdd(spark: SparkSession, streamDir: String,
       corpusDir: String, stateDir: String): StreamingQuery =
-    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema, stateDir) {
       (batch, batchId) => applyGraphBatch(spark, batch, batchId, corpusDir, stateDir)
     }
 
@@ -333,7 +332,7 @@ object StreamingJobs {
   def runStreamingIndexAdd(spark: SparkSession, streamDir: String, corpusDir: String,
       outDir: String): StreamingQuery = {
     graft.operators.Ann.ivfIndexFull(spark, corpusDir) // fit/load once, up front
-    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema, outDir) {
       (batch, batchId) => applyIndexAddBatch(spark, batch, batchId, corpusDir, outDir)
     }
   }
@@ -386,7 +385,7 @@ object StreamingJobs {
       corpusParquet: String, outDir: String, threshold: Double): StreamingQuery = {
     val corpus = spark.read.parquet(corpusParquet)
       .select(col("doc_id"), col("source"), col("text"))
-    foreachBatchAvailableNow(spark, streamDir, corpus.schema) {
+    foreachBatchAvailableNow(spark, streamDir, corpus.schema, outDir) {
       (batch, batchId) => applyTextDedupBatch(spark, batch, batchId, corpus, outDir, threshold)
     }
   }
@@ -559,7 +558,7 @@ object StreamingJobs {
     * corpus as in q134 when the corpus is at rest). */
   def runStreamingHeavyHitters(spark: SparkSession, streamDir: String,
       textCol: String, k: Int, stateDir: String): StreamingQuery =
-    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema, stateDir) {
       (batch, batchId) => applyMgBatch(spark, batch, textCol, batchId, k, stateDir)
     }
 
@@ -578,7 +577,7 @@ object StreamingJobs {
     * cross-engine). */
   def runStreamingIncrementalAgg(spark: SparkSession, streamDir: String,
       key: String, valueCol: String, stateDir: String): StreamingQuery =
-    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema, stateDir) {
       (batch, batchId) => applyAggBatch(spark, batch, batchId, key, valueCol, stateDir)
     }
 
@@ -740,15 +739,6 @@ object StreamingJobs {
       }
     }
 
-  /** Streaming Count-Min maintenance: document files arriving as a
-    * stream keep the q151 frequency sketch current, one [[applyCmsBatch]]
-    * merge per micro-batch; read it any time with [[latestAggState]]. */
-  def runStreamingCms(spark: SparkSession, streamDir: String, textCol: String,
-      depth: Int, width: Int, stateDir: String): StreamingQuery =
-    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
-      (batch, batchId) => applyCmsBatch(spark, batch, textCol, batchId, depth, width, stateDir)
-    }
-
   /** Merge one micro-batch into a persistent k-per-group priority
     * sample, exactly once per batchId ([[applyAggBatch]] contract).
     * State is (group, id) — ≤ k rows per group forever. Bottom-k by a
@@ -832,18 +822,6 @@ object StreamingJobs {
       graft.operators.Dedup.connectedComponents(comb)
     }
 
-  /** Streaming connected-components maintenance: edge files arriving as
-    * a stream keep the dup-cluster labeling current (q64 as a standing
-    * job — "which cluster does this new posting join" without re-running
-    * CC over history). Read the labeling any time with [[latestAggState]];
-    * drained state == one-shot batch CC over every edge (StreamingSpec
-    * proves it, plus replay idempotency). */
-  def runStreamingCc(spark: SparkSession, streamDir: String,
-      stateDir: String): StreamingQuery =
-    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
-      (batch, batchId) => applyCcBatch(spark, batch, batchId, stateDir)
-    }
-
   /** Streaming JOIN-VIEW maintenance — q138's delta algebra as a
     * standing job for the static-dimension case: fact deltas (lineitem
     * files) arrive as a stream, each micro-batch is enriched against
@@ -862,7 +840,7 @@ object StreamingJobs {
       dimParquet: String, stateDir: String): StreamingQuery = {
     val dim = spark.read.parquet(dimParquet)
       .select(col("o_orderkey"), col("o_orderpriority"))
-    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
+    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema, stateDir) {
       (batch, batchId) =>
         val enriched = batch.select(col("l_orderkey"), col("l_quantity"))
           .join(broadcast(dim), col("l_orderkey") === col("o_orderkey"))
@@ -1069,16 +1047,6 @@ object StreamingJobs {
     latestAggState(spark, stateDir).map { case (bid, st) =>
       (bid, graft.plans.CurationPipeline.manifestFromState(
         spark, corpusDir, st, budget)) }
-
-  /** Streaming curation maintenance: document files arriving as a
-    * stream keep the composed-pipeline state current, one
-    * [[applyCurationBatch]] merge per micro-batch; read the manifest
-    * any time with [[latestCurationManifest]]. */
-  def runStreamingCuration(spark: SparkSession, streamDir: String,
-      stateDir: String): StreamingQuery =
-    foreachBatchAvailableNow(spark, streamDir, spark.read.parquet(streamDir).schema) {
-      (batch, batchId) => applyCurationBatch(spark, batch, batchId, stateDir)
-    }
 
   /** Streaming exact dedup: first event per (user_id, event_type), state
     * bounded by a 1-day watermark — dropDuplicates-with-watermark, the

@@ -286,6 +286,42 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch, s"state diverges: $streamed vs $batch")
   }
 
+  test("live runner resumes from its checkpoint: a late file with an older mtime folds once") {
+    // A and B drain; then C lands with an mtime a minute before A's
+    // (inside the file source's 7-day maxFileAge) and the runner is
+    // re-run on the same state dir. Without a kept stream checkpoint the
+    // re-run renumbers from batchId 0 in mtime order — C takes A's
+    // committed id and is skipped, B is shifted to a new id and merged
+    // twice.
+    val work = Files.createTempDirectory("graft_resume").toString
+    val ev = Tables.events(spark, sfTiny)
+      .select(col("event_id"), col("event_type"), col("value"))
+    val streamDir = Files.createTempDirectory("graft_resume_stream")
+    def land(i: Int, name: String, mtime: Long): Unit = {
+      ev.filter(col("event_id") % 3 === i).coalesce(1).write.parquet(s"$work/p$i")
+      val part = Files.list(Paths.get(s"$work/p$i"))
+        .filter(_.toString.endsWith(".parquet")).findFirst().get()
+      Files.copy(part, streamDir.resolve(name)).toFile.setLastModified(mtime)
+    }
+    val stateDir = s"$work/state"
+    def run(): Unit = StreamingJobs.runStreamingIncrementalAgg(
+      spark, streamDir.toString, "event_type", "value", stateDir)
+    land(0, "a.parquet", 1000000L)
+    land(1, "b.parquet", 2000000L)
+    run()
+    land(2, "c.parquet", 1000000L - 60000L)
+    run()
+    def snap(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("event_type"), col("cnt"), col("sum_v"), col("min_v"), col("max_v"))
+        .collect().map(r => (r.getString(0), r.getLong(1),
+          math.round(r.getDouble(2) * 1e6), r.getDouble(3), r.getDouble(4))).toSet
+    val (lastBatchId, stateDf) = StreamingJobs.latestAggState(spark, stateDir).get
+    assert(lastBatchId == 2L, s"expected three committed batches, last=$lastBatchId")
+    val streamed = snap(stateDf)
+    val batch = snap(plans.Scale.aggState(ev, "event_type", "value"))
+    assert(streamed == batch, "state after the re-run diverges from one-shot aggState")
+  }
+
   test("streaming join-view maintenance == one-shot aggregate over the full join") {
     val work = Files.createTempDirectory("graft_joinview").toString
     val li = Tables.lineitem(spark, sfTiny)
