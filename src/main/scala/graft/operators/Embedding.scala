@@ -81,10 +81,17 @@ object Embedding {
     * Pass `cacheKey` when the frame is a deterministic function of a
     * dataset (e.g. a pipeline stage) so the fitted model is cached and
     * persisted under that identity. */
-  def embedDocs(docs: DataFrame, cacheKey: Option[String] = None): DataFrame = {
-    val d = GraftConf.embeddingDim(docs.sparkSession)
-    docs.select(col("doc_id"), TfIdf.embed(col("text"), model(docs, cacheKey, d)).as("embedding"))
-  }
+  def embedDocs(docs: DataFrame, cacheKey: Option[String] = None): DataFrame =
+    embedWith(docs, tfidfModel(docs, cacheKey))
+
+  /** The fitted TF-IDF model behind `embedDocs(docs, cacheKey)`, at the
+    * configured dim (JobPipeline commits it as stage 2). */
+  def tfidfModel(docs: DataFrame, cacheKey: Option[String] = None): TfIdfModel =
+    model(docs, cacheKey, GraftConf.embeddingDim(docs.sparkSession))
+
+  /** (doc_id, embedding) of a (doc_id, text) frame under a fitted model. */
+  def embedWith(docs: DataFrame, m: TfIdfModel): DataFrame =
+    docs.select(col("doc_id"), TfIdf.embed(col("text"), m).as("embedding"))
 
   /** Alternative M1 backend: Word2Vec (dense learned vectors, the other
     * public-knowledge stand-in SURVEY §7.1 step 5 names). Seeded;

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io.{DataInputStream, DataOutputStream}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.sql.SparkSession
 import graft.GraftConf
@@ -87,17 +87,24 @@ private[graft] object ModelStore {
       case Some(p) =>
         val file = new Path(p)
         val fs = file.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(file)) {
-          val in = fs.open(file)
-          try read(in) finally in.close()
-        } else {
-          val m = fit
-          val tmp = new Path(file.getParent, s".${file.getName}.${java.util.UUID.randomUUID()}.tmp")
-          val out = fs.create(tmp, true)
-          try write(m, out) finally out.close()
-          // a concurrent writer may have committed the same fit first
-          if (!fs.rename(tmp, file)) fs.delete(tmp, false)
-          m
-        }
+        if (fs.exists(file)) readFile(fs, file, read)
+        else { val m = fit; writeFile(fs, file, m, write); m }
     }
+
+  /** Read one model file on the driver. */
+  def readFile[M](fs: FileSystem, file: Path, read: DataInputStream => M): M = {
+    val in = fs.open(file)
+    try read(in) finally in.close()
+  }
+
+  /** Write `m` to a hidden temp file beside `file` and rename it into
+    * place: the rename commits, so a reader never opens a half-written
+    * model. */
+  def writeFile[M](fs: FileSystem, file: Path, m: M, write: (M, DataOutputStream) => Unit): Unit = {
+    val tmp = new Path(file.getParent, s".${file.getName}.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, true)
+    try write(m, out) finally out.close()
+    // a concurrent writer may have committed the same fit first
+    if (!fs.rename(tmp, file)) fs.delete(tmp, false)
+  }
 }

@@ -85,8 +85,8 @@ object Similarity {
     * plan) — otherwise LSH bucket-join candidates + exact verify. The
     * same trade the reference makes choosing an ANN index over brute
     * force (app/main.py:201-280; .env:7 `IVF100,Flat`). Stats come from
-    * the session-cached plans.TableStats relation (parquet footers +
-    * filesystem summary — metadata, never a data scan), and the routing
+    * the session-cached plans.TableStats relation (a column-free parquet
+    * count + filesystem summary, once per path per session), and the routing
     * decision is logged so a plan flip at scale is visible in the driver
     * log, not silent. */
   /** The routing decision behind [[nearDupPairsAuto]], as a pure

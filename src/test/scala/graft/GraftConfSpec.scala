@@ -144,6 +144,27 @@ class GraftConfSpec extends SparkSpec {
     }
   }
 
+  test("a catalog-less stage-3 rebuild re-embeds stage 1 into bit-identical vectors") {
+    val work = java.nio.file.Files.createTempDirectory("graft_bucket_rebuild").toString
+    val table = new plans.Pipeline(spark, work).bucketedTableName("s3_index")
+    def vectors(): Map[Long, Seq[Long]] = spark.read.parquet(s"$work/s3_index").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits)).toMap
+    withConf("spark.graft.index.buckets", "3") { JobPipeline.run(spark, sfTiny, work, threshold = 0.5) }
+    val before = vectors()
+    // a new session finds the committed stage but no catalog entry: the
+    // table is rewritten from stage 1 and stage 2's committed model
+    spark.sql(s"DROP TABLE $table")
+    operators.Embedding.clearCaches()
+    withConf("spark.graft.index.buckets", "5") {
+      JobPipeline.run(spark, sfTiny, work, threshold = 0.5)
+      val ddl = spark.sql(s"SHOW CREATE TABLE $table").head().getString(0)
+      assert(ddl.contains("INTO 5 BUCKETS"), s"stage 3 was not rebuilt:\n$ddl")
+    }
+    val after = vectors()
+    assert(after.size == before.size && after == before,
+      s"${after.count { case (id, v) => !before.get(id).contains(v) }} of ${before.size} vectors differ")
+  }
+
   test("fit-time conf changes re-fit mid-session instead of reusing a stale model") {
     // the model-cache key must include every fit parameter: after a conf
     // change the SAME session must produce a fresh fit, not silently
@@ -262,14 +283,14 @@ class GraftConfSpec extends SparkSpec {
   }
 
   test("auto pair search reads the stats relation: byte cutoff can refuse exact") {
-    // the decision consumes TableStats (footer rows + fs bytes), not a
+    // the decision consumes TableStats (row count + fs bytes), not a
     // bare count: with rows far under the row cutoff, shrinking ONLY the
     // byte cutoff below the corpus size must flip the route to LSH
     val st = plans.TableStats.embeddings(spark, sfTiny)
     assert(st.rows > 0 && st.bytes > 0, "stats relation empty")
     assert(st.avgRowBytes > 0)
     val cnt = spark.read.parquet(s"$sfTiny/embeddings.parquet").count()
-    assert(st.rows == cnt, "footer row count diverges from scan count")
+    assert(st.rows == cnt, "stats row count diverges from scan count")
     val viaBytes = withConf("spark.graft.pairs.exactCutoff", Long.MaxValue.toString) {
       withConf("spark.graft.pairs.exactMaxBytes", (st.bytes - 1).toString) {
         operators.Similarity.nearDupPairsAuto(spark, sfTiny, 0.35)

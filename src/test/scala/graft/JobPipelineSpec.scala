@@ -39,8 +39,14 @@ class JobPipelineSpec extends SparkSpec {
       assert(Files.exists(java.nio.file.Paths.get(s"$work/$st/_DONE")), st)
     }
 
-    // second run resumes from the committed stages and agrees exactly
-    val again = JobPipeline.run(spark, sfTiny, work, threshold = 0.5).collect()
+    // second run resumes from the committed stages and agrees exactly:
+    // the model is read from stage 2's file and the index from its table
+    var again = Array.empty[org.apache.spark.sql.Row]
+    val resumedSites = jobSitesDuring {
+      again = JobPipeline.run(spark, sfTiny, work, threshold = 0.5).collect()
+    }
+    assert(!resumedSites.exists(s => s.contains("TfIdf.scala") || s.startsWith("saveAsTable")),
+      resumedSites.mkString("\n"))
     assert(again.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ==
       pairs.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
 
@@ -108,7 +114,7 @@ class JobPipelineSpec extends SparkSpec {
         (i.toLong, (0 until 8).map(j => s"w${word(i, j) % 30}").mkString(" "))
       }.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$sfDir/documents.parquet")
     def vectors(work: String): Map[Long, Seq[Double]] =
-      spark.read.parquet(s"$work/s2_embed").collect()
+      spark.read.parquet(s"$work/s3_index").collect()
         .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     def runWithStore(store: String, work: String): Unit = {
       spark.conf.set("spark.graft.index.dir", s"$root/$store")
@@ -132,11 +138,11 @@ class JobPipelineSpec extends SparkSpec {
   test("a stage computed in this run reads back with the schema a resumed run infers") {
     val work = Files.createTempDirectory("graft_jobpipe_schema").toString
     val docs = Tables.documents(spark, sfTiny).select(col("doc_id"), col("text"))
-    // the s1 and s2 shapes (s2's vector array has non-null elements) and
-    // non-null nested fields
+    // the s1 and vector shapes (the vector array has non-null elements)
+    // and non-null nested fields
     val stages = Seq[(String, () => DataFrame)](
       "s1" -> (() => docs),
-      "s2" -> (() => operators.Embedding.embedDocs(docs)),
+      "vectors" -> (() => operators.Embedding.embedDocs(docs)),
       "nested" -> (() => spark.range(3).select(col("id"), array(col("id")).as("a"),
         struct(col("id").as("x")).as("s"), map(lit("k"), col("id")).as("m"), lit(1.5).as("c"))))
     stages.foreach { case (name, compute) =>
@@ -147,19 +153,65 @@ class JobPipelineSpec extends SparkSpec {
     }
   }
 
-  test("one fresh pipeline run on sfTiny with a fresh model store runs at most 19 Spark jobs") {
-    // a tripwire for per-stage writer or schema-inference jobs coming
-    // back: 28 jobs before the native TF-IDF model and schema read-back
+  /** Run one fresh pipeline on sfTiny with a fresh model store; the call
+    * sites of the Spark jobs it started, in order. */
+  private def freshRunJobSites(): Seq[String] = {
     val root = Files.createTempDirectory("graft_jobpipe_jobs").toString
     spark.conf.set("spark.graft.index.dir", s"$root/store")
     operators.Embedding.clearCaches()
     operators.Ann.clearCaches()
-    try {
-      val jobs = jobsDuring(JobPipeline.run(spark, sfTiny, s"$root/work", threshold = 0.5))
-      assert(jobs <= 19, s"$jobs Spark jobs")
-    } finally {
+    try jobSitesDuring(JobPipeline.run(spark, sfTiny, s"$root/work", threshold = 0.5))
+    finally {
       spark.conf.unset("spark.graft.index.dir")
       operators.Embedding.clearCaches()
     }
+  }
+
+  test("one fresh pipeline run on sfTiny with a fresh model store runs at most 13 Spark jobs") {
+    // a tripwire for writer, schema-inference, stats or sink re-read jobs
+    // coming back: 28 jobs before the native TF-IDF model and schema
+    // read-back, 19 before stage 2 committed the model instead of vectors
+    // and the stage-3 write and one sink pass replaced the re-reads
+    val sites = freshRunJobSites()
+    assert(sites.size <= 13, s"${sites.size} Spark jobs:\n${sites.mkString("\n")}")
+  }
+
+  test("no Spark job runs between the stage-3 commit and the stage-4 pack") {
+    // stage 4 routes on the row count the stage-3 write observed and the
+    // filesystem's byte count, so the pack job directly follows the write
+    val sites = freshRunJobSites()
+    val write = sites.lastIndexWhere(_.startsWith("saveAsTable at Pipeline.scala"))
+    assert(write >= 0, sites.mkString("\n"))
+    assert(sites.lift(write + 1).exists(_.contains("PairKernel.scala")),
+      s"jobs after the stage-3 write:\n${sites.drop(write).mkString("\n")}")
+    val src = Files.readString(java.nio.file.Paths.get(
+      sys.props("user.dir"), "src", "main", "scala", "graft", "JobPipeline.scala"))
+    assert(!src.contains("TableStats"), "JobPipeline sizes stage 4 through TableStats again")
+  }
+
+  test("a pipeline run leaves the session serializable") {
+    // tasks that capture the session (an MLlib LogisticRegressionModel's
+    // training summary) must still ship after the stage-3 row count
+    JobPipeline.run(spark, sfTiny, Files.createTempDirectory("graft_jobpipe_ser").toString, 0.5)
+    val out = new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream)
+    try out.writeObject(spark) finally out.close()
+  }
+
+  test("a work dir whose s2_embed holds vector parquet (the old layout) resumes to a fresh run's pairs") {
+    val root = Files.createTempDirectory("graft_jobpipe_oldlayout").toString
+    def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val fresh = pairSet(JobPipeline.run(spark, sfTiny, s"$root/fresh", threshold = 0.5))
+    // the old layout: stage 1 committed, stage 2 committed as (doc_id,
+    // embedding) parquet with an empty marker, no model file
+    val old = s"$root/old"
+    val s1 = new plans.Pipeline(spark, old).stage("s1_preprocess")(
+      spark.read.parquet(s"$root/fresh/s1_preprocess"))
+    operators.Embedding.embedDocs(s1).write.parquet(s"$old/s2_embed")
+    Files.createFile(java.nio.file.Paths.get(s"$old/s2_embed/_DONE"))
+    val resumed = pairSet(JobPipeline.run(spark, sfTiny, old, threshold = 0.5))
+    assert(resumed == fresh)
+    val left = new java.io.File(s"$old/s2_embed").list().toSet.filterNot(_.startsWith("."))
+    assert(left == Set("_DONE", plans.Pipeline.ArtifactFile), s"s2_embed holds $left")
   }
 }

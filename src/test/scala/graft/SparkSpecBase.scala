@@ -32,17 +32,22 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** Spark jobs started while `body` runs, adaptive query stages
     * included; the listener bus is drained on both sides. */
-  def jobsDuring(body: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+  def jobsDuring(body: => Any): Int = jobSitesDuring(body).size
+
+  /** The call site of each Spark job started while `body` runs, in start
+    * order ("saveAsTable at Pipeline.scala:NN": the name of the job's
+    * result stage). */
+  def jobSitesDuring(body: => Any): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
     }
     val sc = spark.sparkContext
     org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try { body; org.apache.spark.GraftListenerBus.drain(sc) }
     finally sc.removeSparkListener(listener)
-    jobs.get
+    scala.jdk.CollectionConverters.CollectionHasAsScala(sites).asScala.toSeq
   }
 }
