@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Scale-safe eager materialization for within-query intermediates that
   * are consumed more than once (iterative round states, multi-consumer
@@ -38,5 +39,20 @@ object Mat {
         s.sparkContext.setCheckpointDir(GraftConf.checkpointDir(s))
       df.checkpoint(true)
     } else df.localCheckpoint(true)
+  }
+
+  /** [[apply]] plus the number of rows it materialized, counted by a
+    * named `observe` metric as the rows pass and read from the
+    * materializing action's own plan once it returns (no extra job); a
+    * `count()` on the materialization if the metric is missing. */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val metric = s"graft_mat_rows_${java.util.UUID.randomUUID()}"
+    val observed = df.observe(metric, count(lit(1)))
+    val m = apply(observed)
+    val n = observed.queryExecution.observedMetrics.get(metric) match {
+      case Some(r) => r.getLong(0)
+      case None => m.count()
+    }
+    (m, n)
   }
 }

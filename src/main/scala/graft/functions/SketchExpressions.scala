@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -144,6 +144,56 @@ object SketchKernels {
     }
     new GenericArrayData(out)
   }
+
+  /** Sorted 60-bit shingle keys: for each element, the first 8 bytes of
+    * md5(utf8) as a big-endian long shifted right by 4 — the value of
+    * conv(substring(md5(s), 1, 15), 16, 10), with no hex string built.
+    * Ascending, duplicates kept (two shingles whose keys collide count
+    * twice, as the exploded key join counted them). */
+  def shingleKeys(shingles: ArrayData): ArrayData = {
+    val digest = md.get()
+    val scratch = new Array[Byte](16)
+    val n = shingles.numElements()
+    val keys = new Array[Long](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i)) {
+        digest.reset()
+        digest.update(shingles.getUTF8String(i).getBytes)
+        digest.digest(scratch, 0, 16)
+        var k = 0L
+        var j = 0
+        while (j < 8) { k = (k << 8) | (scratch(j) & 0xffL); j += 1 }
+        keys(m) = k >>> 4
+        m += 1
+      }
+      i += 1
+    }
+    val out = if (m == n) keys else java.util.Arrays.copyOf(keys, m)
+    java.util.Arrays.sort(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Matches between two ascending key arrays, with multiplicity:
+    * Σ_k m_a(k)·m_b(k), what an equi-join on the exploded keys counts. */
+  def sortedIntersect(a: ArrayData, b: ArrayData): Long = {
+    val na = a.numElements(); val nb = b.numElements()
+    var i = 0; var j = 0
+    var inter = 0L
+    while (i < na && j < nb) {
+      val x = a.getLong(i); val y = b.getLong(j)
+      if (x < y) i += 1
+      else if (y < x) j += 1
+      else {
+        val i0 = i; val j0 = j
+        while (i < na && a.getLong(i) == x) i += 1
+        while (j < nb && b.getLong(j) == x) j += 1
+        inter += (i - i0).toLong * (j - j0)
+      }
+    }
+    inter
+  }
 }
 
 /** Distinct n-word shingle kernel, split out so the object keeps static
@@ -231,6 +281,43 @@ case class MinhashSignature(child: Expression, numHashes: Int) extends SketchExp
       c => s"graft.functions.SketchKernels.minhashSig($c, $numHashes)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Sorted 60-bit md5 shingle keys -> ARRAY<LONG>; see
+  * [[SketchKernels.shingleKeys]]. */
+case class ShingleKeys(child: Expression) extends SketchExpression {
+  override def prettyName: String = "graft_shingle_keys"
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any =
+    SketchKernels.shingleKeys(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernels.shingleKeys($c)")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Sorted-merge match count of two ascending ARRAY<LONG> key arrays ->
+  * LONG, multiplicity included; see [[SketchKernels.sortedIntersect]]. */
+case class SortedIntersect(left: Expression, right: Expression) extends BinaryExpression {
+  override def prettyName: String = "graft_sorted_intersect"
+  override def dataType: DataType = LongType
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires two ARRAY<BIGINT>, got ${l.catalogString}, ${r.catalogString}")
+  }
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SketchKernels.sortedIntersect(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SketchKernels.sortedIntersect($a, $b)")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 /** Distinct n-word shingles -> ARRAY<STRING>. Native rather than a
@@ -377,6 +464,13 @@ object SketchFunctions {
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     GraftColumnBridge.column(
       MinhashSignature(GraftColumnBridge.expression(shingles), numHashes))
+
+  def shingleKeys(shingles: Column): Column =
+    GraftColumnBridge.column(ShingleKeys(GraftColumnBridge.expression(shingles)))
+
+  def sortedIntersect(a: Column, b: Column): Column =
+    GraftColumnBridge.column(
+      SortedIntersect(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 
   def shingleArray(tokens: Column, n: Int): Column =
     GraftColumnBridge.column(ShingleArray(GraftColumnBridge.expression(tokens), n))

@@ -19,6 +19,14 @@ import graft.functions.VectorKernels.cosineFast
   * bucket equi-join (shuffle on band key), never an all-pairs cross join,
   * so each stays linear-ish in corpus size on a cluster.
   *
+  * The 3-shingle Jaccard path (q51/q59/q64/q69 and the curation stages)
+  * makes one pass over the documents per call ([[sketchFrame]]: one
+  * materialized row per document with its MinHash band keys and its
+  * sorted shingle-key array). The band self-join and the exact verify
+  * both read it; the verify is a sorted merge of two key arrays per
+  * candidate pair. Connected components collect small pair sets once and
+  * union-find them on the driver.
+  *
   * Hashing is md5-based on both the Spark and DuckDB sides so every stage
   * of every sketch is oracle-replayable bit-for-bit.
   */
@@ -76,46 +84,56 @@ object Dedup {
   def minhashCandidates(s: SparkSession, d: String): DataFrame =
     minhashCandidatePairs(s, d).orderBy(col("id1"), col("id2"))
 
-  /** Unordered candidate relation (id1, id2, n_bands) — the composition
-    * entry point (q59): no final sort to drag into a downstream plan. */
-  /** Per-doc MinHash band rows (doc_id, b, key, <carried cols>) under the
-    * conf'd shape — the shared candidate-generation relation. `carry`
-    * names extra input columns to keep alongside the band rows. */
-  private[graft] def minhashBandedFrame(docs: DataFrame,
-      carry: Seq[String] = Nil): DataFrame = {
+  /** The per-document sketch relation (doc_id, n_sh, bands, ks,
+    * <carried cols>) under the conf'd MinHash shape, built in ONE pass
+    * and materialized once per call: tokenize, shingle the distinct
+    * 3-word shingles, then from the same shingle array the MinHash band
+    * keys (`bands`, one "<hex>|<hex>" string per band) and the sorted
+    * 60-bit md5 shingle keys (`ks`) with their count `n_sh`. Both
+    * consumers read it: the band self-join (candidate generation) and
+    * the exact-Jaccard verify (a sorted merge of two `ks` arrays). An
+    * unmaterialized subtree would re-run the tokenize→shingle→hash chain,
+    * the dominant cost of every sketch-dedup query, once per join side;
+    * the relation is N rows of bounded arrays, and a deployment keeps it
+    * as its banded index ([[graft.Mat]]: reliable checkpoints at cluster
+    * scale). Documents with fewer than 3 tokens (no shingle) are
+    * dropped after the materialization: a filter before it would be
+    * pushed under the projection and split every document twice. */
+  private[graft] def sketchFrame(docs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     val s = docs.sparkSession
     val fns = GraftConf.minhashFuncs(s)
     val rows = GraftConf.minhashBandRows(s)
     require(fns > 0 && rows > 0 && fns % rows == 0,
       s"minhash.bandRows ($rows) must divide minhash.funcs ($fns)")
-    // Materialize the token array BEFORE shingling: inlining the split
-    // expression into the shingle lambda would re-split the whole document
-    // once per element_at (HOFs are interpreted, no subexpression reuse).
     val bands = (0 until fns / rows).map { b =>
       concat_ws("|", (0 until rows).map(r =>
         element_at(col("sig"), b * rows + r + 1)): _*)
     }
     val c = carry.map(col)
-    // materialized ONCE (r17, guide §2.4): every consumer self-joins
-    // this relation (band-bucket candidate generation), and an
-    // unmaterialized subtree re-ran the tokenize→shingle→8-minhash
-    // chain — the dominant cost of every sketch-dedup query — once per
-    // join side. N·bands rows of (doc_id, band, key): bounded, and the
-    // banded index IS what a deployment materializes (graft.Mat:
-    // reliable-checkpoint mode at cluster scale).
+    // each step's output is read more than once by the next, so Catalyst
+    // keeps the projections apart: the shingle array and the signature
+    // are each computed once per document
     graft.Mat(docs
-      .select((Seq(col("doc_id"), toks(col("text")).as("t")) ++ c): _*)
-      .filter(size(col("t")) >= 3)
-      .select((Seq(col("doc_id"), shingles(col("t"), 3).as("sh")) ++ c): _*)
-      .select((Seq(col("doc_id"), minhashSignature(col("sh"), fns).as("sig")) ++ c): _*)
-      .select((Seq(col("doc_id"), posexplode(array(bands: _*)).as(Seq("b", "key"))) ++ c): _*))
+      .select((Seq(col("doc_id"), shingles(toks(col("text")), 3).as("sh")) ++ c): _*)
+      .select((Seq(col("doc_id"), size(col("sh")).as("n_sh"),
+        minhashSignature(col("sh"), fns).as("sig"), shingleKeys(col("sh")).as("ks")) ++ c): _*)
+      .select((Seq(col("doc_id"), col("n_sh"), array(bands: _*).as("bands"), col("ks")) ++ c): _*))
+      .filter(col("n_sh") > 0)
   }
 
-  private def minhashBanded(s: SparkSession, d: String): DataFrame =
-    minhashBandedFrame(Tables.documents(s, d))
+  /** One (doc_id, b, key, <carried cols>) row per band of a sketch
+    * relation: the input of the band-bucket equi-join. */
+  private def bandRows(sk: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    sk.select((Seq(col("doc_id"), posexplode(col("bands")).as(Seq("b", "key"))) ++
+      carry.map(col)): _*)
 
-  def minhashCandidatePairs(s: SparkSession, d: String): DataFrame = {
-    val banded = minhashBanded(s, d)
+  /** Unordered candidate relation (id1, id2, n_bands) — the composition
+    * entry point (q59): no final sort to drag into a downstream plan. */
+  def minhashCandidatePairs(s: SparkSession, d: String): DataFrame =
+    candidatePairs(sketchFrame(Tables.documents(s, d)))
+
+  private def candidatePairs(sk: DataFrame): DataFrame = {
+    val banded = bandRows(sk)
     val a = banded.select(col("doc_id").as("id1"), col("b"), col("key"))
     val bdf = banded.select(col("doc_id").as("id2"), col("b"), col("key"))
     a.join(bdf, Seq("b", "key")).filter(col("id1") < col("id2"))
@@ -363,51 +381,26 @@ object Dedup {
 
   /** Exact 3-shingle Jaccard computed ONLY for MinHash candidate pairs
     * (the verify-after-candidates shape of the reference's semantic dedup,
-    * app/main.py:226-263, applied to the sketch tier). The verify join is
-    * DRIVEN FROM the candidate relation: candidates join the exploded
-    * shingle table on id1, then the (id2, shingle-key) equi-join counts
-    * the intersection — so verification work is O(candidates x
-    * shingles/doc) no matter how big the corpus is. A shingle shared by f
-    * documents costs q53 O(f^2) rows here it costs only as many rows as
-    * there are candidate pairs containing it. */
-  /** Exploded 3-shingle keys (doc_id, n_sh, k): the verification-side
-    * relation, md5-prefix keyed (8-byte shuffle keys; identical hashing
-    * on the oracle side). */
-  private[graft] def shingleKeysFrame(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), toks(col("text")).as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), shingles(col("t"), 3).as("sh"))
-      .select(col("doc_id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("sgl"))
-      .select(col("doc_id"), col("n_sh"),
-        conv(substring(md5(col("sgl").cast("binary")), 1, 15), 16, 10).cast("long").as("k"))
-
-  private def shingleKeys(s: SparkSession, d: String): DataFrame =
-    shingleKeysFrame(Tables.documents(s, d))
-
-  /** Candidate-driven exact-Jaccard verify: (id1, id2) pairs -> those
-    * with 3-shingle J >= threshold. Work is O(pairs x shingles/doc). */
-  private def verifyJaccard(s: SparkSession, d: String,
-      cand: DataFrame, threshold: Double): DataFrame =
-    verifyJaccardFrame(shingleKeys(s, d), cand, threshold)
-
-  private[graft] def verifyJaccardFrame(ex0: DataFrame,
-      cand: DataFrame, threshold: Double): DataFrame = {
-    // both intersection sides consume the exploded shingle-key relation
-    // — materialized once so the tokenize→shingle→md5 chain is not
-    // evaluated per join side (r17, guide §2.4; same treatment as the
-    // banded relation above)
-    val ex = graft.Mat(ex0)
+    * app/main.py:226-263, applied to the sketch tier). The verify is
+    * DRIVEN FROM the candidate relation: each candidate pair picks up both
+    * documents' sorted shingle-key arrays from the sketch relation (two
+    * equi-joins on id1 and id2) and one sorted merge counts the
+    * intersection — so verification work is O(candidates x shingles/doc)
+    * no matter how big the corpus is, with no exploded shingle rows. The
+    * merge counts each key with multiplicity (m_a(k)·m_b(k)), what a join
+    * on exploded keys counted; pairs sharing no key drop, as they did
+    * from that inner join. */
+  private[graft] def verifyPairs(sk: DataFrame, cand: DataFrame, threshold: Double): DataFrame =
     cand
-      .join(ex.select(col("doc_id").as("id1"), col("n_sh").as("na"), col("k")), Seq("id1"))
-      .join(ex.select(col("doc_id").as("id2"), col("n_sh").as("nb"), col("k")), Seq("id2", "k"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("inter"), first(col("na")).as("na"), first(col("nb")).as("nb"))
+      .join(sk.select(col("doc_id").as("id1"), col("n_sh").as("na"), col("ks").as("ka")), Seq("id1"))
+      .join(sk.select(col("doc_id").as("id2"), col("n_sh").as("nb"), col("ks").as("kb")), Seq("id2"))
+      .select(col("id1"), col("id2"), col("na"), col("nb"),
+        sortedIntersect(col("ka"), col("kb")).as("inter"))
+      .filter(col("inter") > 0)
       .select(col("id1"), col("id2"),
         round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 4)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
   // -------------------------------------------------------------------
   // No cross-query caching of the sketch-dedup substrate (optimization
@@ -421,16 +414,14 @@ object Dedup {
   // -------------------------------------------------------------------
 
   def sketchVerifiedPairs(s: SparkSession, d: String, threshold: Double): DataFrame =
-    verifyJaccard(s, d,
-      minhashCandidatePairs(s, d).select(col("id1"), col("id2")), threshold)
+    verifiedJaccard(Tables.documents(s, d), threshold)
 
-  /** The transitive closure of [[sketchVerifiedPairs]] as (doc_id,
-    * label) CC labels — the shared shape of q64/q183/q217 (each query
-    * computes its own). */
-  private def ccLabels(s: SparkSession, d: String, threshold: Double): DataFrame =
-    connectedComponents(
-      sketchVerifiedPairs(s, d, threshold).select(col("id1"), col("id2")))
-      .withColumnRenamed("v", "doc_id")
+  /** (id1, id2, jaccard) of a document frame: one sketch relation feeds
+    * the band candidates and their verify. */
+  private def verifiedJaccard(docs: DataFrame, threshold: Double): DataFrame = {
+    val sk = sketchFrame(docs)
+    verifyPairs(sk, candidatePairs(sk).select(col("id1"), col("id2")), threshold)
+  }
 
   /** Survivor set under the composed pipeline: greedy keep-lowest-id over
     * the VERIFIED near-dup pairs (candidates alone over-drop: the band
@@ -542,11 +533,12 @@ object Dedup {
     * convergence = both steps leave the edge set unchanged (checked via
     * an order-insensitive fingerprint, sound here because labels only
     * ever decrease). [[graft.Mat]] truncates lineage per round (a
-    * reliable checkpoint under `spark.graft.checkpoint.reliable`). Below
-    * `spark.graft.cc.localEdgeCutoff` edges the operator instead
-    * collects the (already materialized) edge list and union-finds on
-    * the driver — the same "tiny side doesn't deserve distribution"
-    * call as a broadcast join, saving 2·log n rounds of scheduler
+    * reliable checkpoint under `spark.graft.checkpoint.reliable`). At or
+    * below `spark.graft.cc.localEdgeCutoff` input pairs (counted as the
+    * input is materialized) the operator instead collects that
+    * materialization and union-finds on the driver — the same "tiny
+    * side doesn't deserve distribution" call as a broadcast join, saving
+    * the edge dedup, the fingerprint jobs and 2·log n rounds of scheduler
     * latency; both paths produce identical labels (property-asserted).
     * Returns (v, label) for every vertex that appears in an edge;
     * label = min vertex id of the component (OperatorSpec
@@ -556,13 +548,13 @@ object Dedup {
   def connectedComponents(pairs: DataFrame): DataFrame =
     connectedComponentsWithRounds(pairs)._1
 
-  /** Driver-side union-find over a collected edge list (union-by-min:
+  /** Driver-side union-find over a collected pair list (union-by-min:
     * the smaller root always wins, so find() returns the component
     * minimum directly). The small-graph twin of a broadcast join: below
-    * the conf cutoff the edge set is broadcast-sized by definition, and
+    * the conf cutoff the pair set is broadcast-sized by definition, and
     * one driver pass beats 2·log n distributed rounds of pure scheduler
-    * latency. Returns the (leaf → componentMin) star edges, the same
-    * fixed-point shape the distributed alternation converges to. */
+    * latency. Duplicate and self pairs need no pre-pass. Returns
+    * (v, componentMin) for every vertex of every pair. */
   private def localUnionFind(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
@@ -577,17 +569,41 @@ object Dedup {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     edges.iterator.flatMap { case (a, b) => Iterator(a, b) }
-      .toArray.distinct.map(v => (v, find(v))).filter { case (v, m) => v != m }
+      .toArray.distinct.map(v => (v, find(v)))
   }
 
   /** connectedComponents plus the number of alternation rounds taken
     * (exposed for the convergence property test; 0 = local fast path). */
-  def connectedComponentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
+  def connectedComponentsWithRounds(pairs: DataFrame): (DataFrame, Int) =
+    components(pairs) match {
+      case Left(labels) =>
+        val s = pairs.sparkSession
+        import s.implicits._
+        (labels.toSeq.toDF("v", "label"), 0)
+      case Right(distributed) => distributed
+    }
+
+  /** The (v, label) components of `pairs`: Left with the labels already
+    * on the driver when the local path ran, Right with the distributed
+    * relation and its round count otherwise. */
+  private def components(pairs: DataFrame): Either[Array[(Long, Long)], (DataFrame, Int)] = {
     val s = pairs.sparkSession
-    // materialize the input ONCE: pairs is typically an expensive plan
-    // (the whole sketch-dedup candidate pipeline for q64) and both the
-    // vertex set and the edge set derive from it
-    val base = graft.Mat(pairs.select(col("id1"), col("id2")))
+    // materialize the input ONCE, counting its rows as they pass: pairs
+    // is typically an expensive plan (the whole sketch-dedup candidate
+    // pipeline for q64) and both the vertex set and the edge set derive
+    // from it
+    val (base, n) = graft.Mat.counted(pairs.select(col("id1"), col("id2")))
+    // small-graph fast path (spark.graft.cc.localEdgeCutoff): collect the
+    // materialized pairs and union-find on the driver when they fit it
+    // comfortably, run the distributed alternation when they don't
+    if (n <= graft.GraftConf.ccLocalEdgeCutoff(s))
+      Left(localUnionFind(base.collect().map(r => (r.getLong(0), r.getLong(1)))))
+    else Right(distributedComponents(base))
+  }
+
+  /** Large-star/small-star rounds to the fixed point over materialized
+    * (id1, id2) pairs: (v, label) and the number of rounds. */
+  private def distributedComponents(base: DataFrame): (DataFrame, Int) = {
     val verts = base.select(col("id1").as("v"))
       .union(base.select(col("id2").as("v"))).distinct()
     var edges = graft.Mat(base.select(col("id1").as("src"), col("id2").as("dst"))
@@ -595,16 +611,6 @@ object Dedup {
     var fp = edgeFingerprint(edges)
     var rounds = 0
     var converged = fp._1 == 0L
-    // small-graph fast path (spark.graft.cc.localEdgeCutoff): the edge
-    // set is already materialized, its count is in the fingerprint —
-    // collect + union-find when it fits the driver comfortably, run the
-    // distributed alternation when it doesn't
-    if (!converged && fp._1 <= graft.GraftConf.ccLocalEdgeCutoff(s)) {
-      val collected = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      import s.implicits._
-      edges = localUnionFind(collected).toSeq.toDF("src", "dst")
-      converged = true
-    }
     while (!converged) {
       // one materialization + one fingerprint job per round: the two star
       // steps compose into a single checkpointed plan (the intermediate
@@ -623,7 +629,7 @@ object Dedup {
     }
     // validate the distributed fixed point: large-star must also be a
     // no-op (paid once at convergence, not per round; rounds == 0 means
-    // the local path or an empty edge set — already star-form)
+    // an edge set that is empty or all self-pairs — already star-form)
     require(rounds == 0 || edgeFingerprint(largeStar(edges)) == fp,
       "connectedComponents: small-star fixed point is not a large-star fixed point")
     // at the fixed point every edge is (leaf, componentMin); roots only
@@ -640,26 +646,37 @@ object Dedup {
     * graph are their own singleton cluster) and the cluster size. Edges
     * come from the composed q59 pipeline (MinHash candidates -> exact
     * Jaccard >= threshold). */
-  def dupClusters(s: SparkSession, d: String, threshold: Double): DataFrame =
-    labelClusters(s, d, ccLabels(s, d, threshold))
+  def dupClusters(s: SparkSession, d: String, threshold: Double): DataFrame = {
+    val docs = Tables.documents(s, d)
+    labelClusters(docs, components(verifiedPairsFrame(docs, threshold)).map(_._1))
+  }
 
-  /** Every document labeled from a (doc_id, label) component relation:
-    * documents outside it are their own singleton cluster; adds the
-    * cluster size, ordered by doc_id. */
-  private def labelClusters(s: SparkSession, d: String, comp: DataFrame): DataFrame = {
-    val labeled = Tables.documents(s, d).select(col("doc_id"))
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
-    val sizes = labeled.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labeled.join(sizes, Seq("cluster_id"))
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
+  /** Every document of `docs` labeled from its components — labels on
+    * the driver (Left) or a (v, label) relation (Right), each holding
+    * every member once: cluster sizes are counted over the components
+    * alone (on the driver when they are there), and documents outside
+    * them are their own size-1 singleton cluster; ordered by doc_id. */
+  private def labelClusters(docs: DataFrame,
+      comp: Either[Array[(Long, Long)], DataFrame]): DataFrame = {
+    val sized = comp match {
+      case Left(labels) =>
+        val n = labels.groupMapReduce(_._2)(_ => 1L)(_ + _)
+        val s = docs.sparkSession
+        import s.implicits._
+        labels.toSeq.map { case (v, l) => (v, l, n(l)) }.toDF("v", "label", "n")
+      case Right(c) =>
+        c.join(c.groupBy(col("label")).agg(count(lit(1)).as("n")), Seq("label"))
+    }
+    docs.select(col("doc_id"))
+      .join(sized.withColumnRenamed("v", "doc_id"), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"),
+        coalesce(col("n"), lit(1L)).as("cluster_size"))
       .orderBy(col("doc_id"))
   }
 
   val q64DupClusters = GraftQuery(
     "q64_dup_clusters",
-    "D5 transitive closure; connected components (min-label propagation)",
+    "D5 transitive closure; connected components (driver union-find, or large-star/small-star rounds above the cutoff)",
     (s, d) => dupClusters(s, d, threshold = 0.8),
     Some("""WITH RECURSIVE tk AS (
         SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
@@ -818,7 +835,8 @@ object Dedup {
       .withColumn("is_new", lit(false))
       .unionByName(batch.select(col("doc_id"), col("source"), col("text"))
         .withColumn("is_new", lit(true)))
-    val banded = minhashBandedFrame(docs, carry = Seq("is_new"))
+    val sk = sketchFrame(docs, carry = Seq("is_new"))
+    val banded = bandRows(sk, carry = Seq("is_new"))
     val batchSide = banded.filter(col("is_new"))
       .select(col("doc_id").as("id1"), col("b"), col("key"))
     val allSide = banded
@@ -829,7 +847,7 @@ object Dedup {
       // lower-id batch doc dominates (keep-first within the increment)
       .filter(!col("new2") || col("id2") < col("id1"))
       .select(col("id1"), col("id2")).distinct()
-    val dropped = verifyJaccardFrame(shingleKeysFrame(docs), cand, threshold)
+    val dropped = verifyPairs(sk, cand, threshold)
       .select(col("id1").as("doc_id")).distinct()
     batch.select(col("doc_id"), col("source"))
       .join(dropped, Seq("doc_id"), "left_anti")
@@ -1339,7 +1357,7 @@ object Dedup {
       nBatches) {
       (b, id, dir) => graft.streaming.StreamingJobs.applyCcBatch(s, b, id, dir)
     }
-    labelClusters(s, d, comp.withColumnRenamed("v", "doc_id"))
+    labelClusters(Tables.documents(s, d), Right(comp))
   }
 
   val q153StreamedCc = GraftQuery(
@@ -1659,15 +1677,8 @@ object Dedup {
 
   /** Verified near-dup pairs (id1 < id2) of a document frame: MinHash
     * band candidates → exact-Jaccard verify (the q59/q64 front half). */
-  private[graft] def verifiedPairsFrame(docs: DataFrame, threshold: Double): DataFrame = {
-    val banded = minhashBandedFrame(docs)
-    val a = banded.select(col("doc_id").as("id1"), col("b"), col("key"))
-    val b = banded.select(col("doc_id").as("id2"), col("b"), col("key"))
-    val cand = a.join(b, Seq("b", "key")).filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-    verifyJaccardFrame(shingleKeysFrame(docs), cand, threshold)
-      .select(col("id1"), col("id2"))
-  }
+  private[graft] def verifiedPairsFrame(docs: DataFrame, threshold: Double): DataFrame =
+    verifiedJaccard(docs, threshold).select(col("id1"), col("id2"))
 
   /** q64's transitive clusters over a frame: verified pairs → connected
     * components → singleton fill. (doc_id, cluster_id). */

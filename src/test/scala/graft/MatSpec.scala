@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** [[graft.Mat]] is the engine's one materialization call: no other
   * main-code module checkpoints a DataFrame itself, and the queries
@@ -54,6 +56,25 @@ class MatSpec extends SparkSpec {
         assert(grew(n) > 0, s"$n wrote no reliable checkpoint files (grew: $grew)")
       }
     } finally {
+      spark.conf.unset("spark.graft.checkpoint.reliable")
+      spark.conf.unset("spark.graft.checkpoint.dir")
+    }
+  }
+
+  test("Mat.counted returns the rows it materialized without a count job, in both modes") {
+    val df = spark.range(0, 1000, 1, 4).toDF("id").filter(col("id") % 3 === 0)
+    def check(mode: String): Unit = {
+      var got: (DataFrame, Long) = null
+      val sites = jobSitesDuring { got = Mat.counted(df) }
+      assert(got._2 == 334, s"$mode: counted ${got._2} rows")
+      assert(got._1.count() == 334, s"$mode: materialized the wrong rows")
+      assert(!sites.exists(_.startsWith("count at")), s"$mode: fell back to a count job: $sites")
+    }
+    check("local")
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    spark.conf.set("spark.graft.checkpoint.dir", Files.createTempDirectory("graft_mat_count").toString)
+    try check("reliable")
+    finally {
       spark.conf.unset("spark.graft.checkpoint.reliable")
       spark.conf.unset("spark.graft.checkpoint.dir")
     }

@@ -114,6 +114,23 @@ class OperatorSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.cc.localEdgeCutoff")
   }
 
+  test("dupClusters on sfTiny runs at most 11 Spark jobs") {
+    // one sketch pass, one counted materialization of the verified pairs
+    // collected for the driver-side union-find, then the labelling
+    Dedup.dupClusters(spark, sfTiny, 0.8).collect()
+    val jobs = jobsDuring(Dedup.dupClusters(spark, sfTiny, 0.8).collect())
+    assert(jobs <= 11, s"dupClusters ran $jobs Spark jobs")
+  }
+
+  test("q64 with the local CC path off returns the default-path rows") {
+    def rows(): Seq[String] =
+      SparkEntry.queries("q64_dup_clusters")(spark, sfTiny).collect().map(_.toString).toSeq
+    val local = rows()
+    spark.conf.set("spark.graft.cc.localEdgeCutoff", "0")
+    try assert(rows() == local, "the distributed CC round changed q64's rows")
+    finally spark.conf.unset("spark.graft.cc.localEdgeCutoff")
+  }
+
   test("degenerate thresholds: no pairs -> all-singleton clusters; empty increment -> empty survivors") {
     // threshold > 1 admits no verified pair: every doc is its own cluster
     val clusters = Dedup.dupClusters(spark, sfTiny, threshold = 1.01)

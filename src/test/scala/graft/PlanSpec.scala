@@ -96,24 +96,38 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q59 verify join is driven by the candidate set, not a corpus self-join") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join}
     val plan = operators.Dedup.sketchVerifiedPairs(spark, sfTiny, 0.8)
       .queryExecution.optimizedPlan
-    // The shingle-intersection join is the only one keyed on `k`.
-    val verifyJoins = plan.collect {
-      case j: Join if j.condition.exists(_.references.exists(_.name == "k")) => j
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case other => Seq(other)
     }
-    assert(verifyJoins.nonEmpty, s"no shingle-key verify join found:\n$plan")
-    // Its left input must contain the candidate-pair aggregate (the
+    def equiKeys(j: Join): Set[String] = j.condition.toSeq.flatMap(conjuncts).collect {
+      case EqualTo(l: Attribute, r: Attribute) => Set(l.name, r.name)
+    }.flatten.toSet
+    // The verify joins are the ones keyed on the pair ids alone: each
+    // candidate pair picks up its documents' shingle-key arrays by id1
+    // and id2 (the band join is keyed on (b, key)).
+    val verifyJoins = plan.collect {
+      case j: Join if equiKeys(j).nonEmpty && equiKeys(j).subsetOf(Set("id1", "id2", "doc_id")) => j
+    }
+    assert(verifyJoins.size == 2, s"expected the id1 and id2 verify joins:\n$plan")
+    // Their left input must contain the candidate-pair aggregate (the
     // group-by over (id1, id2) from the MinHash band join) — i.e. the
     // exact-Jaccard work is restricted to candidate pairs, not replayed
     // over the whole corpus like q53's baseline join.
-    assert(verifyJoins.exists(_.left.collectFirst {
+    assert(verifyJoins.forall(_.left.collectFirst {
       case a: Aggregate
         if a.groupingExpressions.flatMap(_.references.map(_.name))
           .toSet == Set("id1", "id2") => a
     }.isDefined),
-      s"verify join's left side lacks the candidate aggregate:\n$plan")
+      s"a verify join's left side lacks the candidate aggregate:\n$plan")
+    // No shingle rows are exploded anywhere in the plan: the only
+    // generator is the band explode over the materialized sketch.
+    val generators = plan.collect { case g: Generate => g.generator.references.map(_.name).toSet }
+    assert(generators.forall(_ == Set("bands")), s"a Generate over shingles in the verify plan:\n$plan")
   }
 
   test("q83 top-1 is a hash aggregate, not a window sort over the scored pairs") {
