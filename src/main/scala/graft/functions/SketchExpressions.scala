@@ -4,6 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.functions.{conv, lower, md5, split, substring, trim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -147,7 +148,7 @@ object SketchKernels {
 
   /** Sorted 60-bit shingle keys: for each element, the first 8 bytes of
     * md5(utf8) as a big-endian long shifted right by 4 — the value of
-    * conv(substring(md5(s), 1, 15), 16, 10), with no hex string built.
+    * `SketchFunctions.md5Long(s, 15)`, with no hex string built.
     * Ascending, duplicates kept (two shingles whose keys collide count
     * twice, as the exploded key join counted them). */
   def shingleKeys(shingles: ArrayData): ArrayData = {
@@ -449,8 +450,20 @@ case class NfkcNormalize(child: Expression, casefold: Boolean)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Column-API wrappers. */
+/** Column-API wrappers, and the two text conventions every query and
+  * its DuckDB oracle replay: the tokenizer and the md5-prefix hash. */
 object SketchFunctions {
+  /** Lowercased whitespace tokens; the oracle's
+    * `string_split_regex(lower(trim(text)), '\s+')`. */
+  def toks(c: Column): Column = split(lower(trim(c)), "\\s+")
+
+  /** The first `hexDigits` hex digits of md5(c) as a long; the oracle's
+    * `('0x' || substr(md5(c), 1, hexDigits))::BIGINT`. 8 digits give the
+    * split buckets, 13 a value exact in a double, 15 the 60-bit keys.
+    * Callers keep their own `% 100`, `% shards` or `% width`. */
+  def md5Long(c: Column, hexDigits: Int): Column =
+    conv(substring(md5(c.cast("binary")), 1, hexDigits), 16, 10).cast("long")
+
   def nfcNormalize(s: Column): Column =
     GraftColumnBridge.column(NfcNormalize(GraftColumnBridge.expression(s)))
 

@@ -27,17 +27,15 @@ import graft.functions.VectorKernels.cosineFast
   * candidate pair. Connected components collect small pair sets once and
   * union-find them on the driver.
   *
+  * The exact n-shingle Jaccard and overlap queries (q53, q58, q109/q133,
+  * q170) read one key-set builder, [[shingleKeySets]]: per document the
+  * sorted 60-bit md5 keys of its shingles, the same keys [[sketchFrame]]
+  * holds. They explode the keys where they need key rows.
+  *
   * Hashing is md5-based on both the Spark and DuckDB sides so every stage
   * of every sketch is oracle-replayable bit-for-bit.
   */
 object Dedup {
-
-  /** Lowercased whitespace tokens. */
-  private def toks(c: Column): Column = split(lower(trim(c)), "\\s+")
-
-  /** Distinct n-word shingles from a token array (native kernel — see
-    * [[graft.functions.ShingleArray]] for why this must not be a HOF). */
-  private def shingles(t: Column, n: Int): Column = shingleArray(t, n)
 
   // ---------------------------------------------------------------------
   // q50: exact keyed dedup, keep-first (D1/D3)
@@ -114,11 +112,26 @@ object Dedup {
     // keeps the projections apart: the shingle array and the signature
     // are each computed once per document
     graft.Mat(docs
-      .select((Seq(col("doc_id"), shingles(toks(col("text")), 3).as("sh")) ++ c): _*)
+      .select((Seq(col("doc_id"), shingleArray(toks(col("text")), 3).as("sh")) ++ c): _*)
       .select((Seq(col("doc_id"), size(col("sh")).as("n_sh"),
         minhashSignature(col("sh"), fns).as("sig"), shingleKeys(col("sh")).as("ks")) ++ c): _*)
       .select((Seq(col("doc_id"), col("n_sh"), array(bands: _*).as("bands"), col("ks")) ++ c): _*))
       .filter(col("n_sh") > 0)
+  }
+
+  /** The per-document n-shingle key sets (doc_id, n_sh, ks, <carried
+    * cols>): `ks` is the sorted array of 60-bit md5 keys of the
+    * document's distinct n-word shingles, `n_sh` its length. Colliding
+    * keys stay duplicated, so exploding `ks` and joining on the key
+    * counts Σ m_a·m_b, as the oracles' unnest-and-join does. Documents
+    * with fewer than n tokens have no n-shingle and drop. */
+  private[graft] def shingleKeySets(docs: DataFrame, n: Int,
+      carry: Seq[String] = Nil): DataFrame = {
+    val c = carry.map(col)
+    docs.select((Seq(col("doc_id"), toks(col("text")).as("t")) ++ c): _*)
+      .filter(size(col("t")) >= n)
+      .select((Seq(col("doc_id"), shingleKeys(shingleArray(col("t"), n)).as("ks")) ++ c): _*)
+      .select((Seq(col("doc_id"), size(col("ks")).as("n_sh"), col("ks")) ++ c): _*)
   }
 
   /** One (doc_id, b, key, <carried cols>) row per band of a sketch
@@ -261,32 +274,21 @@ object Dedup {
     * on pair) — the verification stage that an LSH candidate pass feeds at
     * scale. Emits pairs with J >= 0.05. */
   def ngramJaccard(s: SparkSession, d: String, n: Int, threshold: Double): DataFrame = {
-    // Tokens materialized before shingling (see minhashCandidates), and
-    // the join key is a 60-bit md5 prefix of the shingle, not the shingle
+    // The join key is the 60-bit md5 key of the shingle, not the shingle
     // string: 8-byte shuffle keys instead of ~30-char strings. Both sides
-    // (Spark + oracle) hash identically, so results agree even in the
-    // astronomically-unlikely collision case.
-    // materialize the exploded shingle-key relation ONCE (r17, guide
-    // §2.4/§2.3): both sides of the self-join re-ran the tokenize→
-    // shingle→md5 chain, and the set sizes rode through the pair
-    // fan-out. Now the fan-out ships only (doc_id, k) and the sizes
-    // re-attach per candidate pair after aggregation — identical values
-    // (same inputs, same arithmetic), so the oracle is untouched.
-    val ex = graft.Mat(Tables.documents(s, d)
-      .select(col("doc_id"), toks(col("text")).as("t"))
-      .filter(size(col("t")) >= n)
-      .select(col("doc_id"), shingles(col("t"), n).as("sh"))
-      .select(col("doc_id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("s"))
-      .select(col("doc_id"), col("n_sh"),
-        conv(substring(md5(col("s").cast("binary")), 1, 15), 16, 10).cast("long").as("k")))
-    val sizes = ex.groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh"))
+    // (Spark + oracle) hash identically, so results agree even when two
+    // shingles collide. The key sets are materialized once: both sides
+    // of the self-join and both set-size lookups read them, and the
+    // fan-out ships only (doc_id, k).
+    val sk = graft.Mat(shingleKeySets(Tables.documents(s, d), n))
+    val ex = sk.select(col("doc_id"), explode(col("ks")).as("k"))
     val a = ex.select(col("doc_id").as("id1"), col("k"))
     val b = ex.select(col("doc_id").as("id2"), col("k"))
     a.join(b, Seq("k")).filter(col("id1") < col("id2"))
       .groupBy(col("id1"), col("id2"))
       .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("id1"), col("n_sh").as("na")), Seq("id1"))
-      .join(sizes.select(col("doc_id").as("id2"), col("n_sh").as("nb")), Seq("id2"))
+      .join(sk.select(col("doc_id").as("id1"), col("n_sh").as("na")), Seq("id1"))
+      .join(sk.select(col("doc_id").as("id2"), col("n_sh").as("nb")), Seq("id2"))
       .select(col("id1"), col("id2"), col("inter"),
         round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 4)
           .as("jaccard"))
@@ -391,16 +393,20 @@ object Dedup {
     * on exploded keys counted; pairs sharing no key drop, as they did
     * from that inner join. */
   private[graft] def verifyPairs(sk: DataFrame, cand: DataFrame, threshold: Double): DataFrame =
+    scoredPairs(sk, cand).filter(col("jaccard") >= threshold)
+      .select(col("id1"), col("id2"), col("jaccard"))
+
+  /** (id1, id2, inter, jaccard) of the candidate pairs that share a key. */
+  private def scoredPairs(sk: DataFrame, cand: DataFrame): DataFrame =
     cand
       .join(sk.select(col("doc_id").as("id1"), col("n_sh").as("na"), col("ks").as("ka")), Seq("id1"))
       .join(sk.select(col("doc_id").as("id2"), col("n_sh").as("nb"), col("ks").as("kb")), Seq("id2"))
       .select(col("id1"), col("id2"), col("na"), col("nb"),
         sortedIntersect(col("ka"), col("kb")).as("inter"))
       .filter(col("inter") > 0)
-      .select(col("id1"), col("id2"),
+      .select(col("id1"), col("id2"), col("inter"),
         round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 4)
           .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
 
   // -------------------------------------------------------------------
   // No cross-query caching of the sketch-dedup substrate (optimization
@@ -740,27 +746,19 @@ object Dedup {
     * so the score is self-consistent and the oracle replays it exactly. */
   def ngramJaccardDfCut(s: SparkSession, d: String, n: Int,
       threshold: Double, maxDf: Int): DataFrame = {
-    val ex = Tables.documents(s, d)
-      .select(col("doc_id"), toks(col("text")).as("t"))
-      .filter(size(col("t")) >= n)
-      .select(col("doc_id"), explode(shingles(col("t"), n)).as("sgl"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("sgl").cast("binary")), 1, 15), 16, 10).cast("long").as("k"))
+    val ex = shingleKeySets(Tables.documents(s, d), n)
+      .select(col("doc_id"), explode(col("ks")).as("k"))
     val retainedKeys = ex.groupBy(col("k"))
       .agg(count(lit(1)).as("df")).filter(col("df") <= maxDf)
       .select(col("k"))
-    // materialize the df-cut shingle relation ONCE (r17, guide §2.4):
-    // three consumers (per-doc sizes + both sides of the pair join)
-    // each re-ran the tokenize→explode→df-join chain. At scale this is
-    // the filtered posting relation an SSJoin deployment materializes
-    // anyway (8-byte key + id per row; reliable-checkpoint mode writes
-    // it to the cluster FS, graft.Mat).
+    // the df-cut key relation is materialized once: the per-doc sizes
+    // and both sides of the pair join read it. At scale this is the
+    // filtered posting relation an SSJoin deployment materializes
+    // anyway (8-byte key + id per row).
     val retained = graft.Mat(ex.join(retainedKeys, Seq("k")))
     val sizes = retained.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    // ship ONLY (doc_id, k) through the pair fan-out — the set sizes
-    // re-attach per candidate pair after aggregation (guide §2.3
-    // "project before the exchange"); values are identical to the
-    // carried-through form (same inputs, same arithmetic)
+    // the fan-out ships only (doc_id, k); the set sizes re-attach per
+    // candidate pair after aggregation
     val a = retained.select(col("doc_id").as("id1"), col("k"))
     val b = retained.select(col("doc_id").as("id2"), col("k"))
     a.join(b, Seq("k")).filter(col("id1") < col("id2"))
@@ -911,7 +909,7 @@ object Dedup {
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= n)
-      .select(col("doc_id"), col("source"), explode(shingles(col("t"), n)).as("span"))
+      .select(col("doc_id"), col("source"), explode(shingleArray(col("t"), n)).as("span"))
       .groupBy(col("span"))
       .agg(count(lit(1)).as("df"),
         countDistinct(col("source")).as("n_sources"),
@@ -1167,29 +1165,17 @@ object Dedup {
   // q109: train/test decontamination (D5 ext — the eval-leak check)
   // ---------------------------------------------------------------------
 
-  /** One row per (doc, distinct n-word shingle): `(doc_id, b, n_sh, k)`
-    * where `b` is q76's deterministic md5 split bucket, `n_sh` the doc's
-    * shingle count, `k` the 60-bit md5-prefix shingle key (both engines
-    * hash identically — q53's trick; 8-word shingles make accidental
-    * collisions require genuinely shared text). Shared by q109/q133. */
-  private def shingleKeyFrame(s: SparkSession, d: String, n: Int): DataFrame =
-    Tables.documents(s, d)
-      .withColumn("b",
-        conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8),
-          16, 10).cast("long") % 100)
-      .select(col("doc_id"), col("b"), toks(col("text")).as("t"))
-      .filter(size(col("t")) >= n)
-      .select(col("doc_id"), col("b"), shingles(col("t"), n).as("sh"))
-      .select(col("doc_id"), col("b"), size(col("sh")).as("n_sh"),
-        explode(col("sh")).as("s"))
-      .select(col("doc_id"), col("b"), col("n_sh"),
-        conv(substring(md5(col("s").cast("binary")), 1, 15), 16, 10)
-          .cast("long").as("k"))
+  /** The n-shingle key sets with `b`, q76's deterministic md5 split
+    * bucket, carried (8-word shingles make accidental key collisions
+    * require genuinely shared text). Shared by q109/q133. */
+  private def splitKeySets(s: SparkSession, d: String, n: Int): DataFrame =
+    shingleKeySets(Tables.documents(s, d)
+      .withColumn("b", md5Long(col("doc_id").cast("string"), 8) % 100), n, carry = Seq("b"))
 
-  /** Per-test-doc contamination report from the test shingle frame and a
+  /** Per-test-doc contamination report from the test key sets and a
     * per-doc hit count: the shared q109/q133 output shape. */
-  private def contaminationReport(testEx: DataFrame, hits: DataFrame): DataFrame =
-    testEx.select(col("doc_id"), col("n_sh")).distinct()
+  private def contaminationReport(test: DataFrame, hits: DataFrame): DataFrame =
+    test.select(col("doc_id"), col("n_sh"))
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_sh").cast("long").as("n_sh"),
         coalesce(col("n_hit"), lit(0L)).as("n_hit"))
@@ -1210,12 +1196,13 @@ object Dedup {
     "q109_decontaminate",
     "LLM-pipeline: train/test decontamination (n-gram overlap); D5 ext",
     (s, d) => {
-      val ex = shingleKeyFrame(s, d, n = 8)
-      val trainKeys = ex.filter(col("b") < 80).select(col("k")).distinct()
-      val testEx = ex.filter(col("b") >= 90)
-      val hits = testEx.join(trainKeys, Seq("k"))
+      val sk = splitKeySets(s, d, n = 8)
+      val trainKeys = sk.filter(col("b") < 80).select(explode(col("ks")).as("k")).distinct()
+      val test = sk.filter(col("b") >= 90)
+      val hits = test.select(col("doc_id"), explode(col("ks")).as("k"))
+        .join(trainKeys, Seq("k"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
-      contaminationReport(testEx, hits)
+      contaminationReport(test, hits)
     },
     Some("""WITH b AS (
         SELECT doc_id, text,
@@ -1268,9 +1255,9 @@ object Dedup {
     * O(overlap + FPP·train distinct) — tunable to ~zero with
     * `spark.graft.bloom.numBits` sized to the test set. */
   def decontaminateBloom(s: SparkSession, d: String, n: Int): DataFrame = {
-    val ex = shingleKeyFrame(s, d, n)
-    val trainEx = ex.filter(col("b") < 80)
-    val testEx = ex.filter(col("b") >= 90)
+    val sk = splitKeySets(s, d, n)
+    val test = sk.filter(col("b") >= 90)
+    val testEx = test.select(col("doc_id"), explode(col("ks")).as("k"))
     val blob = testEx
       .agg(graft.functions.BloomFunctions.bloomAgg(col("k"),
         GraftConf.bloomEstItems(s), GraftConf.bloomNumBits(s)).as("bf"))
@@ -1280,13 +1267,13 @@ object Dedup {
         testEx.select(col("doc_id")).limit(0)
           .withColumn("n_hit", lit(0L))
       else {
-        val candTrain = trainEx.select(col("k"))
+        val candTrain = sk.filter(col("b") < 80).select(explode(col("ks")).as("k"))
           .filter(graft.functions.BloomFunctions.mightContain(blob, col("k")))
           .distinct()
-        candTrain.join(broadcast(testEx.select(col("doc_id"), col("k"))), Seq("k"))
+        candTrain.join(broadcast(testEx), Seq("k"))
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
       }
-    contaminationReport(testEx, hits)
+    contaminationReport(test, hits)
   }
 
   val q133DecontaminateBloom = GraftQuery(
@@ -1395,34 +1382,23 @@ object Dedup {
     * — a float τ·|x| landing an ulp above an integer would silently
     * shorten prefixes and drop qualifying pairs. */
   def prefixFilterJaccard(s: SparkSession, d: String, n: Int,
-      tauNum: Int, tauDen: Int): DataFrame = {
+      tauNum: Int, tauDen: Int): DataFrame =
+    // the key sets are materialized once: the df count, the prefix
+    // ranking and both sides of the verify read them
+    prefixJaccardPairs(graft.Mat(shingleKeySets(Tables.documents(s, d), n)), tauNum, tauDen)
+
+  /** q170 over a key-set frame (doc_id, n_sh, ks). */
+  private[graft] def prefixJaccardPairs(sk: DataFrame, tauNum: Int, tauDen: Int): DataFrame = {
     require(tauNum >= 1 && tauDen >= tauNum, "need 0 < tau <= 1 as num/den")
-    val tau = tauNum.toDouble / tauDen
-    // distinct shingle keys per doc, q53's 60-bit md5 key compression
-    val ex = Tables.documents(s, d)
-      .select(col("doc_id"), toks(col("text")).as("t"))
-      .filter(size(col("t")) >= n)
-      .select(col("doc_id"), shingles(col("t"), n).as("sh"))
-      .select(col("doc_id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("sgl"))
-      .select(col("doc_id"), col("n_sh"),
-        conv(substring(md5(col("sgl").cast("binary")), 1, 15), 16, 10).cast("long").as("k"))
+    val ex = sk.select(col("doc_id"), col("n_sh"), explode(col("ks")).as("k"))
     val dfk = ex.groupBy(col("k")).agg(count(lit(1)).as("df"))
-    // per-doc keys in global (df asc, k asc) order + the prefix slice,
-    // materialized ONCE: three joins consume this relation (both sides
-    // of the candidate join and the verification arrays) — unpinned, the
-    // tokenize→df-join→sort pipeline re-runs per consumer (measured 4×
-    // recompute in the 10× rehearsal before this checkpoint)
-    val docs = graft.Mat(ex.join(dfk, Seq("k"))
-      .groupBy(col("doc_id"))
-      .agg(first(col("n_sh")).as("n_sh"),
-        sort_array(collect_list(struct(col("df"), col("k")))).as("ord"))
-      .select(col("doc_id"), col("n_sh"),
-        expr("transform(ord, x -> x.k)").as("keys"),
-        expr(s"n_sh - (n_sh * $tauNum + ${tauDen - 1}) DIV $tauDen + 1").as("plen")))
-    // 1-based position of each prefix key feeds the positional filter
-    val pref = docs.select(col("doc_id"), col("n_sh"),
-      posexplode(slice(col("keys"), lit(1), col("plen"))))
-      .select(col("doc_id"), col("n_sh"), (col("pos") + 1).as("pos"), col("col").as("k"))
+    // each doc's keys ranked in global (df asc, k asc) order; the first
+    // n_sh − ⌈τ·n_sh⌉ + 1 are its prefix, and the 1-based rank feeds the
+    // positional filter
+    val pref = ex.join(dfk, Seq("k"))
+      .withColumn("pos", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("k"))))
+      .filter(col("pos") <= expr(s"n_sh - (n_sh * $tauNum + ${tauDen - 1}) DIV $tauDen + 1"))
     // candidate join with the two PPJoin prunes, both integer-exact:
     // LENGTH filter — J ≥ τ forces min(|x|,|y|) ≥ τ·max(|x|,|y|)
     //   (num·na ≤ den·nb and num·nb ≤ den·na);
@@ -1445,19 +1421,9 @@ object Dedup {
       .filter(lit(1) + least(col("na") - col("i"), col("nb") - col("j")) >=
         expr(s"((na + nb) * $tauNum + ${alphaDen - 1}) DIV $alphaDen"))
       .select(col("id1"), col("id2")).distinct()
-    // verify: exact intersection over the full key arrays
-    val left = docs.select(col("doc_id").as("id1"), col("n_sh").as("na"),
-      col("keys").as("ka"))
-    val right = docs.select(col("doc_id").as("id2"), col("n_sh").as("nb"),
-      col("keys").as("kb"))
-    cand.join(left, Seq("id1")).join(right, Seq("id2"))
-      .select(col("id1"), col("id2"),
-        size(array_intersect(col("ka"), col("kb"))).cast("long").as("inter"),
-        col("na"), col("nb"))
-      .select(col("id1"), col("id2"), col("inter"),
-        round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 4)
-          .as("jaccard"))
-      .filter(col("jaccard") >= tau)
+    // verify: the sorted merge over the full key sets, as q59's
+    scoredPairs(sk, cand)
+      .filter(col("jaccard") >= tauNum.toDouble / tauDen)
       .orderBy(col("jaccard").desc, col("id1"), col("id2"))
   }
 
@@ -1505,9 +1471,7 @@ object Dedup {
     * label join; no new shuffle over the corpus. */
   def leakSafeSplit(s: SparkSession, d: String, threshold: Double): DataFrame =
     dupClusters(s, d, threshold)
-      .withColumn("bucket",
-        conv(substring(md5(col("cluster_id").cast("string").cast("binary")), 1, 8),
-          16, 10).cast("long") % 100)
+      .withColumn("bucket", md5Long(col("cluster_id").cast("string"), 8) % 100)
       .select(col("doc_id"), col("cluster_id"),
         when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "val")

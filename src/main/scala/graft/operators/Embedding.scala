@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftConf, GraftQuery, Tables}
 import graft.functions.{GramianAggregator, TfIdf, TfIdfModel}
+import graft.functions.SketchFunctions.toks
 
 /** M1 — text -> embedding. The reference encodes with a sentence
   * transformer (app/generate_embeddings.py:25-50, all-MiniLM-L6-v2,
@@ -107,7 +108,7 @@ object Embedding {
     val dim = GraftConf.embeddingDim(s)
     val parts = GraftConf.w2vNumPartitions(s)
     val docs = Tables.documents(s, d).select(col("doc_id"),
-      split(lower(trim(col("text"))), "\\s+").as("toks"))
+      toks(col("text")).as("toks"))
     // same lifecycle as the main pipeline: session cache + persisted
     // artifact keyed by every fit parameter
     val model = graft.FitTiming.cachedOrFit(w2vCache,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftConf, GraftQuery, Tables}
+import graft.functions.SketchFunctions.toks
 
 /** Hybrid retrieval — reciprocal-rank fusion of the engine's lexical
   * (rational BM25, q141) and vector (stats-routed k-NN, q181) tiers:
@@ -31,9 +32,6 @@ import graft.{GraftConf, GraftQuery, Tables}
   * past it). The fusion join touches ≤ 2k rows per query.
   */
 object Hybrid {
-
-  private def toks(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    split(lower(trim(c)), "\\s+")
 
   // The lexical tower's term-frequency relations — the FORWARD-INDEX
   // side of the inverted index. Two layers (round 14 completes the

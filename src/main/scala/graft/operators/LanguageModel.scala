@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
+import graft.functions.SketchFunctions.toks
 import graft.streaming.StreamingJobs
 
 /** N-gram language-model perplexity scoring — the CCNet/Gopher quality
@@ -47,7 +48,7 @@ import graft.streaming.StreamingJobs
 object LanguageModel {
 
   private def wordsOf(c: Column): Column =
-    filter(split(lower(trim(c)), "\\s+"), w => w =!= "")
+    filter(toks(c), w => w =!= "")
 
   /** (doc_id, w1, w2): sentinel-prefixed bigram stream — one row per
     * token, w1 = previous token or "&lt;s&gt;" at position 0. Built with

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
+import graft.functions.SketchFunctions.{md5Long, toks}
 import graft.streaming.StreamingJobs
 
 /** Text analysis suite (north-star: lang-ID, quality scoring, token counts,
@@ -15,9 +16,6 @@ import graft.streaming.StreamingJobs
   * lower (app/preprocess_data.py:24-34,95-103); these operators extend that
   * surface to what a large-scale LLM-training-data pipeline needs. */
 object TextAnalysis {
-
-  /** Tokens: lowercase, whitespace-split. */
-  private def toks(c: Column): Column = split(lower(trim(c)), "\\s+")
 
   private val stopwords = Seq("the", "a", "of", "and", "to", "in")
 
@@ -933,8 +931,7 @@ object TextAnalysis {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     withTok
       .withColumn("shard",
-        conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8),
-          16, 10).cast("long") % shards)
+        md5Long(col("doc_id").cast("string"), 8) % shards)
       .withColumn("cum", sum(col("n_tok")).over(w))
       .withColumn("seq_id", floor((col("cum") - col("n_tok")) / budget))
       .groupBy(col("source"), col("shard"), col("seq_id"))
@@ -1013,8 +1010,7 @@ object TextAnalysis {
     (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
-          (conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-            .cast("long") % 100).as("bucket"))
+          (md5Long(col("doc_id").cast("string"), 8) % 100).as("bucket"))
         .select(col("doc_id"), col("source"),
           when(col("bucket") < 80, "train")
             .when(col("bucket") < 90, "val")
@@ -1374,8 +1370,7 @@ object TextAnalysis {
     "q119_drift_report",
     "LLM-pipeline: split/corpus distribution drift report; A-ext",
     (s, d) => {
-      val bucket = conv(substring(md5(col("doc_id").cast("string")
-        .cast("binary")), 1, 8), 16, 10).cast("long") % 100
+      val bucket = md5Long(col("doc_id").cast("string"), 8) % 100
       val binned = Tables.documents(s, d)
         .withColumn("b", bucket)
         .filter(col("b") < 80 || col("b") >= 90)
@@ -1515,9 +1510,7 @@ object TextAnalysis {
     val topk = udaf(new graft.functions.TopKAggregator(k))
     // negate: the aggregator keeps the k LARGEST scores, we want the
     // k smallest priorities; 52-bit magnitudes negate exactly
-    val negPri = -conv(
-      substring(md5(col(idCol).cast("string").cast("binary")), 1, 13),
-      16, 10).cast("long").cast("double")
+    val negPri = -md5Long(col(idCol).cast("string"), 13).cast("double")
     df.select(col(groupCol), col(idCol), negPri.as("negp"))
       .groupBy(col(groupCol))
       .agg(topk(col("negp"), col(idCol)).as("picks"))
@@ -1653,8 +1646,7 @@ object TextAnalysis {
   /** The CMS hash: md5-derived (oracle-replayable) column index of
     * `term` in sketch row `j`. */
   private[graft] def cmsCell(term: Column, j: Column, width: Int): Column =
-    conv(substring(md5(concat(lit("cms"), j.cast("string"), lit(":"), term)
-      .cast("binary")), 1, 13), 16, 10).cast("long") % width
+    md5Long(concat(lit("cms"), j.cast("string"), lit(":"), term), 13) % width
 
   /** Count-Min cell relation (j, cell, cnt) of a document frame — the
     * sketch AS DATA. Partial-agg state is capped at depth×width rows per
@@ -1745,8 +1737,7 @@ object TextAnalysis {
   /** The HLL hash: md5-derived (oracle-replayable) 52-bit value of a
     * term — the q151 cmsCell trick applied to cardinality estimation. */
   private[graft] def hllHash(term: Column): Column =
-    conv(substring(md5(concat(lit("hll:"), term).cast("binary")), 1, 13),
-      16, 10).cast("long")
+    md5Long(concat(lit("hll:"), term), 13)
 
   /** HLL register relation (reg, max_rank) of a document frame's term
     * stream, OCCUPIED registers only — the sketch AS DATA [Flajolet et
@@ -1934,8 +1925,7 @@ object TextAnalysis {
     * point (n ≫ m) — and shingles are what decontamination actually
     * matches on (q109). */
   def splitOverlapRegisters(s: SparkSession, d: String, m: Int): DataFrame = {
-    val bucket = conv(substring(md5(col("doc_id").cast("string")
-      .cast("binary")), 1, 8), 16, 10).cast("long") % 100
+    val bucket = md5Long(col("doc_id").cast("string"), 8) % 100
     val sided = Tables.documents(s, d)
       .select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
@@ -3000,8 +2990,7 @@ object TextAnalysis {
     docs.select(col("doc_id"), col("source"))
       .join(encodedDocs(s, d, k), Seq("doc_id"))
       .withColumn("shard",
-        conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8),
-          16, 10).cast("long") % shards)
+        md5Long(col("doc_id").cast("string"), 8) % shards)
       .withColumn("n_tok", col("n_tokens").cast("long"))
       .withColumn("cum", sum(col("n_tok")).over(w))
       .withColumn("seq_id", floor((col("cum") - col("n_tok")) / budget))
@@ -3057,8 +3046,7 @@ object TextAnalysis {
         Seq("doc_id"))
       .select(col("doc_id"), col("source"),
         col("n_tokens").cast("long").as("n_tok"),
-        substring(md5(col("doc_id").cast("string").cast("binary")), 1, 13)
-          .as("pri"))
+        md5Long(col("doc_id").cast("string"), 13).as("pri"))
     val w = Window.partitionBy(col("source")).orderBy(col("pri"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = base.withColumn("cum", sum(col("n_tok")).over(w))
@@ -3437,10 +3425,9 @@ object TextAnalysis {
     val spans = enc
       .select(col("doc_id"), col("n"),
         explode(expr("sequence(0, n - 1)")).as("tpos"))
-      .withColumn("hv", conv(substring(md5(concat(
+      .withColumn("hv", md5Long(concat(
           col("doc_id").cast("string"), lit(":"),
-          col("tpos").cast("string"), lit(s":s$seed")).cast("binary")),
-        1, 13), 16, 10).cast("long"))
+          col("tpos").cast("string"), lit(s":s$seed")), 13))
       .filter(col("hv") % rateInv === 0)
       .select(col("doc_id"), col("n"), col("tpos").cast("long").as("s"),
         expr(s"least(CAST(tpos AS BIGINT) + (hv div $rateInv) % $maxSpan, " +
@@ -3685,9 +3672,8 @@ object TextAnalysis {
     // local-cumsum window re-scan it, and each re-scan replayed the
     // docTokens join
     val keyed = graft.Mat(docTokens(s, d, k)
-      .withColumn("ord", conv(substring(md5(
-          concat(lit(s"$seed:"), col("doc_id").cast("string")).cast("binary")),
-        1, 15), 16, 10).cast("long"))
+      .withColumn("ord",
+        md5Long(concat(lit(s"$seed:"), col("doc_id").cast("string")), 15))
       .withColumn("shard", col("ord") % shards))
     val wloc = Window.partitionBy(col("source"), col("shard"))
       .orderBy(col("ord"), col("doc_id"))

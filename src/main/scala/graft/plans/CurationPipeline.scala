@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
+import graft.functions.SketchFunctions.{md5Long, shingleArray, toks}
 import graft.operators.{Dedup, QualityFilter, TextAnalysis}
 import graft.streaming.StreamingJobs
 
@@ -41,19 +42,15 @@ import graft.streaming.StreamingJobs
   */
 object CurationPipeline {
 
-  private[graft] def toksOf(c: Column): Column = split(lower(trim(c)), "\\s+")
-
   /** md5-bucket of a long id/cluster into [0, 100) — the q76/q183
     * split convention. */
   private def bucket100(c: Column): Column =
-    conv(substring(md5(c.cast("string").cast("binary")), 1, 8), 16, 10)
-      .cast("long") % 100
+    md5Long(c.cast("string"), 8) % 100
 
   /** 60-bit md5-derived row key over `parts` joined with chr(1) — the
     * q130 fingerprint convention. */
   private[graft] def rowKey(parts: Column*): Column =
-    conv(substring(md5(concat_ws("\u0001", parts.map(_.cast("string")): _*)
-      .cast("binary")), 1, 15), 16, 10).cast("long")
+    md5Long(concat_ws("\u0001", parts.map(_.cast("string")): _*), 15)
 
   // -------------------------------------------------------------------
   // The stage computations as pure frame transforms — ONE definition
@@ -89,10 +86,10 @@ object CurationPipeline {
   private[graft] def decontaminateStage(s3: DataFrame): DataFrame = {
     val keyed = s3.withColumn("b", bucket100(col("doc_id")))
     val sh = keyed
-      .select(col("doc_id"), col("b"), toksOf(col("text")).as("t"))
+      .select(col("doc_id"), col("b"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 8)
       .select(col("doc_id"), col("b"),
-        explode(graft.functions.SketchFunctions.shingleArray(col("t"), 8)).as("sgl"))
+        explode(shingleArray(col("t"), 8)).as("sgl"))
     val bench = sh.filter(col("b") >= 90).select(col("sgl")).distinct()
     val hit = sh.filter(col("b") < 90)
       .join(bench, Seq("sgl"), "left_semi")
@@ -161,7 +158,7 @@ object CurationPipeline {
       extraKey: Seq[String] = Nil): DataFrame =
     docs.select(
       rowKey((Seq(col("doc_id")) ++ extraKey.map(col) :+ col("text")): _*).as("rk"),
-      size(toksOf(col("text"))).cast("long").as("n_tok"))
+      size(toks(col("text"))).cast("long").as("n_tok"))
       .agg(count(lit(1)).as("n_rows"),
         coalesce(sum(col("n_tok")), lit(0L)).as("n_tokens"),
         coalesce(expr("bit_xor(rk)"), lit(0L)).as("fp"))

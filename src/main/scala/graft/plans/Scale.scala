@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
+import graft.functions.SketchFunctions.md5Long
 
 /** Scale-out building blocks: skew salting and bucketed co-located joins
   * (the reference's only scale lever is a 10k-row batch loop,
@@ -533,10 +534,9 @@ object Scale {
     // silently SKIPS null columns, which would make ('x', NULL, 'y') and
     // ('x', 'y', NULL) fingerprint-equal and diverge from any || -based
     // oracle (replay the marker as coalesce(col, chr(2)) there)
-    val rowKey = md5(concat_ws("\u0001",
-      cols.map(c => coalesce(col(c).cast("string"), lit("\u0002"))): _*)
-      .cast("binary"))
-    df.select(conv(substring(rowKey, 1, 15), 16, 10).cast("long").as("rk"))
+    val rowKey = md5Long(concat_ws("\u0001",
+      cols.map(c => coalesce(col(c).cast("string"), lit("\u0002"))): _*), 15)
+    df.select(rowKey.as("rk"))
       .agg(count(lit(1)).as("n_rows"), expr("bit_xor(rk)").as("fp"))
   }
 
@@ -667,13 +667,11 @@ object Scale {
           .getContentSummary(p).getLength
       }
       compact(s, dir, targetFileBytes = math.max(1L, bytes / 4))
-      val rowKey = md5(concat_ws("\u0001",
+      val rowKey = md5Long(concat_ws("\u0001",
         Seq("doc_id", "lang", "source", "n_chars")
-          .map(c => coalesce(col(c).cast("string"), lit("\u0002"))): _*)
-        .cast("binary"))
+          .map(c => coalesce(col(c).cast("string"), lit("\u0002"))): _*), 15)
       s.read.parquet(dir)
-        .select(col("lang"),
-          conv(substring(rowKey, 1, 15), 16, 10).cast("long").as("rk"))
+        .select(col("lang"), rowKey.as("rk"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(rk)").as("fp"))
         .orderBy(col("lang"))
@@ -1030,9 +1028,8 @@ object Scale {
     * key) — zero shuffle until the final ≤ S-row stats aggregate. */
   def rendezvousAssign(df: DataFrame, keyCol: String, shards: Int): DataFrame = {
     require(shards >= 1)
-    val w = conv(substring(md5(concat(lit("hrw:"), col("shard").cast("string"),
-      lit(":"), col(keyCol).cast("string")).cast("binary")), 1, 13), 16, 10)
-      .cast("long")
+    val w = md5Long(concat(lit("hrw:"), col("shard").cast("string"),
+      lit(":"), col(keyCol).cast("string")), 13)
     df.select(col(keyCol))
       .withColumn("shard", explode(array((0 until shards).map(lit): _*)))
       .select(col(keyCol), col("shard"), w.as("w"))
@@ -1124,11 +1121,10 @@ object Scale {
     "LLM-pipeline layout ext: seeded affine-permutation corpus shuffle -> training shards, order-sig manifest",
     (s, d) => seededShuffleAssign(Tables.documents(s, d), "doc_id",
         shards = 8, seed = 42L)
-      .withColumn("sig", conv(substring(md5(concat(
+      .withColumn("sig", md5Long(concat(
           col("shard").cast("string"), lit(":"),
           col("pos").cast("string"), lit(":"),
-          col("doc_id").cast("string")).cast("binary")), 1, 13), 16, 10)
-        .cast("long"))
+          col("doc_id").cast("string")), 13))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"),
         expr("bit_xor(sig)").as("order_sig"),

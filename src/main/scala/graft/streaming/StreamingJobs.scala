@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.functions.SketchFunctions.toks
 
 /** Structured Streaming surface (north-star extension; the reference is
   * batch-only with file-existence stage caching, app/main.py:110-177).
@@ -515,7 +516,7 @@ object StreamingJobs {
     var cached: Seq[DataFrame] = Nil
     val applied = try withStateVersion(spark, stateDir, batchId) { prev =>
       val tok = batch.select(
-        explode(split(lower(trim(col(textCol))), "\\s+")).as("term"))
+        explode(toks(col(textCol))).as("term"))
       val delta = tok.groupBy(col("term")).agg(count(lit(1)).as("cnt")).cache()
       val prevTotal = prev.map(_.agg(max(col("total_n"))).head().getLong(0)).getOrElse(0L)
       val prevCounters = prev.map(_.filter(col("term").isNotNull)
@@ -999,7 +1000,7 @@ object StreamingJobs {
         lit(null).cast("string").as("text"),
         lit(null).cast("string").as("lang"),
         lit(null).cast("string").as("source"),
-        size(CurationPipeline.toksOf(col("text"))).cast("long").as("n_tok"),
+        size(toks(col("text"))).cast("long").as("n_tok"),
         CurationPipeline.rowKey(col("doc_id"), col("text")).as("rk"),
         lit(null).cast("string").as("fp"))
       val mergedIn = prev.map(_.filter(col("rel") === "in"))

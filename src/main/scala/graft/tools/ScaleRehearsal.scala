@@ -136,6 +136,9 @@ object ScaleRehearsal {
               .select(col("qid"), col("doc_id"))
               .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
             val sec = (System.nanoTime() - t0) / 1e9
+            // the fusion's own stages only: the count query below adds its own
+            val shuffleMb = m.total(_.shuffleRead) / 1e6
+            val spillMb = m.total(_.diskSpill) / 1e6
             val cand = graft.operators.Hybrid
               .lexScoredCandidates(spark, dir, queryMod = 10,
                 maxDfFrac = 0.85, maxQueryTerms = 8, k1 = 1.2, b = 0.75)
@@ -145,7 +148,7 @@ object ScaleRehearsal {
             val agree = if (cap == 0) { uncapped = res; 1.0 }
               else res.intersect(uncapped).size.toDouble / math.max(1, uncapped.size)
             val line = f"""\"$key\":{\"sec\":$sec%.2f,\"rows\":${res.size},""" +
-              f"""\"shuffle_read_mb\":${m.total(_.shuffleRead) / 1e6}%.1f,\"spill_mb\":${m.total(_.diskSpill) / 1e6}%.1f,""" +
+              f"""\"shuffle_read_mb\":$shuffleMb%.1f,\"spill_mb\":$spillMb%.1f,""" +
               f"""\"cand_per_query_avg\":${cand.getDouble(0)}%.0f,\"cand_per_query_max\":${cand.getLong(1)},""" +
               f"""\"agreement_vs_uncapped\":$agree%.3f}"""
             println(s"[rehearsal] $line")

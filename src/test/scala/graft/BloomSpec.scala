@@ -42,8 +42,9 @@ class BloomSpec extends SparkSpec {
   }
 
   test("empty test split yields an empty report, not a crash") {
-    // n larger than any document's token count -> shingleKeyFrame is
+    // n larger than any document's token count -> the key sets are
     // empty -> the Bloom aggregate yields a null blob.
+    assert(Dedup.shingleKeySets(Tables.documents(spark, sfTiny), 100000).isEmpty)
     val out = Dedup.decontaminateBloom(spark, sfTiny, n = 100000)
     assert(out.count() == 0)
   }

@@ -181,4 +181,23 @@ class SketchKernelSpec extends SparkSpec {
     assert(r.filter(col("len_nfkc") === col("len_raw")).count() == 0,
       "NFKC never folded the injected compatibility glyphs")
   }
+
+  test("main code spells the tokenizer and the md5-prefix hash once, in SketchFunctions") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root), s"source root $root not found")
+    def sites(pattern: String): List[String] = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(pattern) => s"${root.relativize(p)}:${i + 1}"
+        }
+      }.toList
+    // oracle SQL spells its hash substr(md5(, which neither pattern matches
+    for (pattern <- Seq("split(lower(trim(", "substring(md5(")) {
+      val hits = sites(pattern)
+      assert(hits.size == 1 && hits.head.startsWith("graft/functions/SketchExpressions.scala:"),
+        s"$pattern outside SketchFunctions.toks/md5Long: $hits")
+    }
+  }
 }

@@ -13,7 +13,9 @@ import graft.operators.Dedup
   * `conv(substring(md5(shingle), 1, 15), 16, 10)`, and the intersection
   * counted by an equi-join on (id2, k). (id1, id2, jaccard) must agree
   * exactly, on the registered corpus, on a chained near-duplicate corpus,
-  * on degenerate documents and on key arrays with forced collisions. */
+  * on degenerate documents and on key arrays with forced collisions. The
+  * shared n-shingle key-set frame must explode to the same (doc, key)
+  * rows, and q170 must count collisions as its key-join oracle does. */
 class SketchVerifySpec extends SparkSpec {
 
   private def toks(c: Column): Column = split(lower(trim(c)), "\\s+")
@@ -21,11 +23,11 @@ class SketchVerifySpec extends SparkSpec {
   private def md5Key(sgl: Column): Column =
     conv(substring(md5(sgl.cast("binary")), 1, 15), 16, 10).cast("long")
 
-  /** The old verification-side relation: one row per (doc, shingle). */
-  private def refKeys(docs: DataFrame): DataFrame =
+  /** The old verification-side relation: one row per (doc, n-shingle). */
+  private def refKeys(docs: DataFrame, n: Int = 3): DataFrame =
     docs.select(col("doc_id"), toks(col("text")).as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), shingleArray(col("t"), 3).as("sh"))
+      .filter(size(col("t")) >= n)
+      .select(col("doc_id"), shingleArray(col("t"), n).as("sh"))
       .select(col("doc_id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("sgl"))
       .select(col("doc_id"), col("n_sh"), md5Key(col("sgl")).as("k"))
 
@@ -138,6 +140,34 @@ class SketchVerifySpec extends SparkSpec {
     assert(ids == Set(3L, 4L, 5L, 10L, 11L, 12L), s"sketch relation kept $ids")
   }
 
+  /** (doc_id, n_sh, k) rows, sorted: an exact multiset. */
+  private def keyRows(ex: DataFrame): Seq[(Long, Int, Long)] =
+    ex.select(col("doc_id"), col("n_sh"), col("k")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+
+  test("the shared key-set frame explodes to the md5-key reference at n = 3, 5, 8") {
+    val degenerate = docFrame(Seq(
+      1L -> "", 2L -> "   ", 3L -> "a b", 4L -> "a b c d e f g", 5L -> null,
+      6L -> "é ü ß İstanbul 日本語 テキスト 例 😀 🚀", 7L -> "  A b C a B c a b c  ",
+      8L -> "σ ς Σ café café σ ς Σ café"))
+    for (n <- Seq(3, 5, 8); (what, docs) <- Seq("sfTiny" -> Tables.documents(spark, sfTiny),
+        "degenerate" -> degenerate)) {
+      val ks = Dedup.shingleKeySets(docs, n)
+      assert(keyRows(ks.select(col("doc_id"), col("n_sh"), explode(col("ks")).as("k"))) ==
+        keyRows(refKeys(docs, n)), s"$what: key sets differ from the reference at n=$n")
+      assert(ks.filter(col("n_sh") === 0).isEmpty, s"$what: a document without an $n-shingle kept")
+    }
+    def ids(n: Int) = Dedup.shingleKeySets(degenerate, n).select(col("doc_id"))
+      .collect().map(_.getLong(0)).toSet
+    assert(ids(3) == Set(4L, 6L, 7L, 8L) && ids(8) == Set(6L, 7L, 8L), "fewer than n tokens kept")
+  }
+
+  /** Hand-built key sets as a (doc_id, n_sh, ks) frame. */
+  private def keySetFrame(keys: Seq[(Long, Seq[Long])]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(keys.map { case (i, ks) =>
+      Row(i, ks.size, ks) }: _*), StructType(Seq(StructField("doc_id", LongType),
+      StructField("n_sh", IntegerType), StructField("ks", ArrayType(LongType, false)))))
+
   test("forced key collisions: the merge counts m*n, as the key join did") {
     def arr(xs: Long*) = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(xs.toArray)
@@ -150,9 +180,7 @@ class SketchVerifySpec extends SparkSpec {
     val keys = Seq(
       1L -> Seq(1L, 1L, 2L, 5L), 2L -> Seq(1L, 1L, 1L, 5L, 7L), 3L -> Seq(5L, 9L),
       4L -> Seq(2L, 2L, 2L), 5L -> Seq(100L), 6L -> Seq(7L, 7L, 9L, 9L))
-    val sk = spark.createDataFrame(java.util.Arrays.asList(keys.map { case (i, ks) =>
-      Row(i, ks.size, ks) }: _*), StructType(Seq(StructField("doc_id", LongType),
-      StructField("n_sh", IntegerType), StructField("ks", ArrayType(LongType, false)))))
+    val sk = keySetFrame(keys)
     val ex = sk.select(col("doc_id"), col("n_sh"), explode(col("ks")).as("k"))
     val every = allPairs(sk)
     Seq(0.0, 0.3, 1.01).foreach { t =>
@@ -161,6 +189,22 @@ class SketchVerifySpec extends SparkSpec {
     }
     val at0 = rows(Dedup.verifyPairs(sk, every, 0.0)).map(r => (r._1, r._2))
     assert(at0.contains((1L, 2L)) && !at0.contains((1L, 6L)) && !at0.exists(_._1 == 5L))
+  }
+
+  test("forced key collisions: q170 counts m*n, as its key-join oracle does") {
+    // doc 2's first two shingles collide on key 1: the oracle's key join
+    // counts 1·2 + 1 + 1 = 4 shared keys with doc 1 (J = 4/(4+4-4) = 1.0);
+    // distinct-key intersection would count 3 (J = 0.6)
+    val keys = Seq(
+      1L -> Seq(1L, 2L, 3L, 4L), 2L -> Seq(1L, 1L, 2L, 3L), 3L -> Seq(2L, 3L, 4L, 8L),
+      4L -> Seq(5L, 6L, 7L), 5L -> Seq(5L, 6L, 7L, 9L))
+    val sk = keySetFrame(keys)
+    val ex = sk.select(col("doc_id"), col("n_sh"), explode(col("ks")).as("k"))
+    val got = Dedup.prefixJaccardPairs(sk, 1, 2)
+    assert(rows(got) == rows(refVerify(ex, allPairs(sk), 0.5)))
+    val inter = got.select(col("id1"), col("id2"), col("inter")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(inter.get((1L, 2L)).contains(4L), s"pair (1, 2) counted $inter")
   }
 
   test("key kernel equals conv(substring(md5(s), 1, 15), 16, 10), non-ASCII included") {
